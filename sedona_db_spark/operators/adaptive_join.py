@@ -46,8 +46,7 @@ from .fanout import fan_out
 from .spatial_join import (
     _is_axis_rect_wkb,
     _point_in_polygon_refine_udf,
-    _point_x_expr,
-    _point_y_expr,
+    _point_xy,
 )
 
 
@@ -134,10 +133,11 @@ def adaptive_pip_join(
         return out.where(F.lit(False))
 
     if left_xy is not None:
-        px, py = F.col(left_xy[0]), F.col(left_xy[1])
+        L1 = left.withColumn("_px", F.col(left_xy[0])).withColumn("_py", F.col(left_xy[1]))
     else:
-        px, py = _point_x_expr(left_geom), _point_y_expr(left_geom)
-    L1 = left.withColumn("_px", px).withColumn("_py", py)
+        L1 = (left.withColumn("_pxy", _point_xy(F.col(left_geom)))
+              .withColumn("_px", F.col("_pxy.x")).withColumn("_py", F.col("_pxy.y"))
+              .drop("_pxy"))
     # one candidate row per covering level; disjointness of each covering
     # guarantees at most one cell match per (point, geometry) -> no dedup
     cells = F.array(*[

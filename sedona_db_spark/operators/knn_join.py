@@ -48,43 +48,21 @@ from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, Stri
 
 from ..geometry import algos, wkb
 from ..tiling import Grid
+from .spatial_join import _once, _point_xy, _raise_on_nonpoint
 
 
 def _points_xy(df: DataFrame, geom_col: str, xname: str, yname: str,
                strict: bool = False) -> DataFrame:
-    """Decode a point column to x/y. ``strict=True`` raises on any
-    NON-NULL row that is not a point (nulls still decode to null): the
-    probe-side type check is a 1k sample, so without this a non-point row
-    beyond the sampled prefix would silently drop instead of failing loud
-    — and a full type-check scan of a 10^12-row probe side would double
-    the job, so the guard lives inside the decode pass itself."""
-
-    def _decode(s: pd.Series):
-        x, y, v = wkb.decode_points_xy(list(s))
-        if strict:
-            for b, ok in zip(s, v):
-                if b is not None and not ok:
-                    raise ValueError(
-                        "knn_join probe side must be point geometries "
-                        "(non-point row beyond the sampled prefix)"
-                    )
-        return x, y, v
-
-    @F.pandas_udf(DoubleType())
-    def px(s: pd.Series) -> pd.Series:
-        x, _, v = _decode(s)
-        out = pd.Series(x)
-        out[~v] = None
-        return out
-
-    @F.pandas_udf(DoubleType())
-    def py(s: pd.Series) -> pd.Series:
-        _, y, v = _decode(s)
-        out = pd.Series(y)
-        out[~v] = None
-        return out
-
-    return df.withColumn(xname, px(F.col(geom_col))).withColumn(yname, py(F.col(geom_col)))
+    """Decode a point column to x/y in one Python pass. ``strict=True``
+    raises on any NON-NULL row that is not a point (nulls still decode to
+    null): the probe-side type check is a 1k sample, so without this a
+    non-point row beyond the sampled prefix would silently drop instead of
+    failing loud — and a full type-check scan of a 10^12-row probe side
+    would double the job, so the guard lives inside the decode pass."""
+    xy = _point_xy(F.col(geom_col), strict=("probe", "knn_join") if strict else None)
+    return (df.withColumn("_xy", xy)
+            .withColumn(xname, F.col("_xy.x")).withColumn(yname, F.col("_xy.y"))
+            .drop("_xy"))
 
 
 def _classify_build(B: DataFrame, geom_col: str) -> str:
@@ -156,9 +134,12 @@ def _gdist_udf():
 
 def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
                    build_id, use_spheroid: bool, include_ties: bool,
-                   build_geom_col: str, brows=None) -> DataFrame:
+                   build_geom_col: str, probe_geom_col: str,
+                   brows=None) -> DataFrame:
     """Exact kNN with the build side broadcast: per probe Arrow batch, one
-    vectorized (batch x n_build) distance matrix + vectorized top-k.
+    vectorized (batch x n_build) distance matrix + vectorized top-k. The
+    probe WKB is decoded inside the same Python pass (strictly: a non-point
+    row raises), so the probe side costs one Arrow round trip.
 
     The build side is collected ONCE (raw WKB) and classified/decoded on
     the driver — no extra classification or coordinate-derivation Spark
@@ -256,9 +237,14 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
         # Planar analogue: -d^2/2 = (p . b) - |b|^2/2 - |p|^2/2, and the
         # |p|^2 term is constant per probe row, so ranking by the GEMM
         # [px py 1] @ [bx; by; -|b|^2/2] is ranking by euclidean distance.
-        # Exact d^2 (same subtract/multiply ops as the full path) then
-        # re-scores candidates only — selection cut is >= at the kk-th
-        # largest key, so whole tie groups survive.
+        # The key is centred on the build centroid: at large offsets the
+        # raw key cancels catastrophically (~eps*|coord|^2 of noise). The
+        # cut keeps every key within a rounding bound of the kk-th largest
+        # (bound: 32 eps (|p - c| + max|b - c|)^2, covering the GEMM, the
+        # centring and the exact d^2 below), so no full-scan neighbour can
+        # fall below it. Exact d^2 on the ORIGINAL coordinates (same
+        # subtract/multiply ops as the full path) then re-scores the
+        # candidates only.
         eucl_prune = (
             mode == "point" and not use_spheroid and not include_ties
             and n_build_local > 4 * kk_prune)
@@ -276,9 +262,7 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
         buf_p = np.empty(shape)
         buf_m = np.empty(shape, dtype=bool)
 
-        def solve_block(pdf):
-            px = pdf["_px"].to_numpy(np.float64)
-            py = pdf["_py"].to_numpy(np.float64)
+        def solve_block(pdf, px, py):
             n = len(px)
             dx, dy, d = buf_a[:n], buf_b[:n], buf_d[:n]
             if mode == "point":
@@ -321,16 +305,24 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
                     return out
                 if not use_spheroid and eucl_prune:
                     if uv[0] is None:
-                        uv[0] = np.ascontiguousarray(np.stack(
-                            [bx_, by_, -(bx_ * bx_ + by_ * by_) / 2.0],
-                            axis=0))  # (3, n_build)
-                    pxyz = np.stack([px, py, np.ones(n)], axis=1)
-                    G = np.dot(pxyz, uv[0], out=buf_d[:n])
+                        fin = np.isfinite(bx_) & np.isfinite(by_)
+                        cx = float(bx_[fin].mean()) if fin.any() else 0.0
+                        cy = float(by_[fin].mean()) if fin.any() else 0.0
+                        bxc, byc = bx_ - cx, by_ - cy
+                        rmax = float(np.hypot(bxc[fin], byc[fin]).max()) if fin.any() else 0.0
+                        uv[0] = (np.ascontiguousarray(np.stack(
+                            [bxc, byc, -(bxc * bxc + byc * byc) / 2.0],
+                            axis=0)), cx, cy, rmax)  # (3, n_build)
+                    key, cx, cy, rmax = uv[0]
+                    pxc, pyc = px - cx, py - cy
+                    pxyz = np.stack([pxc, pyc, np.ones(n)], axis=1)
+                    G = np.dot(pxyz, key, out=buf_d[:n])
                     cut = n_build_local - kk_prune
                     np.copyto(buf_p[:n], G)
                     part = buf_p[:n]
                     part.partition(cut, axis=1)
-                    Gkth = part[:, cut]
+                    slack = 32 * np.finfo(np.float64).eps * (np.hypot(pxc, pyc) + rmax) ** 2
+                    Gkth = part[:, cut] - slack
                     mask = buf_m[:n]
                     np.greater_equal(G, Gkth[:, None], out=mask)
                     rows, cols = np.nonzero(mask)
@@ -433,10 +425,14 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
 
         # probes stream through in blocks matching the preallocated scratch
         for pdf0 in batches:
-            if not len(pdf0):
-                continue
+            geoms = pdf0[probe_geom_col]
+            x0, y0, ok = wkb.decode_points_xy(list(geoms))
+            _raise_on_nonpoint(geoms, ok, "probe", "knn_join")
+            keep = ok & ~np.isnan(x0)  # NULL / POINT EMPTY probes match nothing
+            pdf0, x0, y0 = pdf0[keep], x0[keep], y0[keep]
             for lo in range(0, len(pdf0), block_rows):
-                yield solve_block(pdf0.iloc[lo:lo + block_rows])
+                hi = lo + block_rows
+                yield solve_block(pdf0.iloc[lo:hi], x0[lo:hi], y0[lo:hi])
 
     res = P.mapInPandas(solve, out_schema)
     drop_cols = [c for c in ("_bx", "_by", "_bx0", "_by0", "_bx1", "_by1") if c in B.columns]
@@ -541,9 +537,10 @@ def knn_join(
     # probe side must be puntal: sampled check raises loudly instead of the
     # round-1 silent drop; a full scan of the 10^12-row probe side just to
     # type-check would double the job, so the guard is a 1k sample + the
-    # exact build-side classification below
+    # strict decode in the probe's one Python pass. The sample reads the
+    # RAW probe: P is groupBy-collapsed, so sampling it runs a shuffle.
     psample = [
-        r[0] for r in P.select(f"_p_{probe_geom}").limit(1000).collect() if r[0] is not None
+        r[0] for r in probe.select(probe_geom).limit(1000).collect() if r[0] is not None
     ]
     for v in psample:
         b = bytes(v)
@@ -551,9 +548,6 @@ def knn_join(
             g = wkb.parse(b)
             if g is None or g.type_id != wkb.POINT:
                 raise NotImplementedError("knn_join probe side must be point geometries")
-    P = _points_xy(P, f"_p_{probe_geom}", "_px", "_py", strict=True).where(
-        F.col("_px").isNotNull()
-    )
 
     bgeom = f"_b_{build_geom}"
 
@@ -579,7 +573,7 @@ def knn_join(
         return _broadcast_knn(
             spark, P, B, k, pcols, bcols, build_id,
             use_spheroid=use_spheroid, include_ties=include_ties,
-            build_geom_col=bgeom, brows=_head,
+            build_geom_col=bgeom, probe_geom_col=f"_p_{probe_geom}", brows=_head,
         )
     n_build = B.count()
     mode = _classify_build(B, bgeom)
@@ -587,7 +581,7 @@ def knn_join(
         return _broadcast_knn(
             spark, P, B, k, pcols, bcols, build_id,
             use_spheroid=use_spheroid, include_ties=include_ties,
-            build_geom_col=bgeom,
+            build_geom_col=bgeom, probe_geom_col=f"_p_{probe_geom}",
         )
     if mode != "point" and use_spheroid:
         # the grid ring-escalation prune is planar; non-point spheroid kNN
@@ -597,13 +591,16 @@ def knn_join(
             "use_spheroid kNN with a non-point build side is supported up "
             f"to broadcast_threshold={broadcast_threshold} build rows"
         )
+    P = _points_xy(P, f"_p_{probe_geom}", "_px", "_py", strict=True).where(
+        F.col("_px").isNotNull()
+    )
     if mode == "point":
         B = _points_xy(B, bgeom, "_bx", "_by").where(F.col("_bx").isNotNull())
     else:
         B = _bounds_cols(B, bgeom).where(F.col("_bx0").isNotNull())
 
     if mode == "point":
-        B = B.withColumn("_cell", cell_of(F.col("_bx"), F.col("_by"))).cache()
+        B = B.withColumn("_cell", _once(cell_of)(F.col("_bx"), F.col("_by"))).cache()
         B_cells = B
     else:
         # envelope covering: a build geometry appears in EVERY cell its
@@ -618,7 +615,7 @@ def knn_join(
                     out.append(grid.cover_env_cells(float(a), float(b), float(c), float(d)).tolist())
             return pd.Series(out, dtype=object)
 
-        B = B.withColumn("_cells", env_cells("_bx0", "_by0", "_bx1", "_by1")).cache()
+        B = B.withColumn("_cells", _once(env_cells)("_bx0", "_by0", "_bx1", "_by1")).cache()
         B_cells = B.withColumn("_cell", F.explode("_cells")).drop("_cells")
 
     # --- broadcast per-cell histogram -----------------------------------------
@@ -649,6 +646,7 @@ def knn_join(
         corner = np.where((x0 > 0) & (y0 > 0), ps[np.maximum(x0 - 1, 0), np.maximum(y0 - 1, 0)], 0)
         return total - left - down + corner
 
+    @_once
     @F.pandas_udf(IntegerType())
     def initial_radius(x: pd.Series, y: pd.Series) -> pd.Series:
         ix, iy = grid.xy_to_ij(x.to_numpy(np.float64), y.to_numpy(np.float64))
@@ -661,6 +659,7 @@ def knn_join(
             step += 1
         return pd.Series((r + 1).astype(np.int32))  # +1 guard ring
 
+    @_once
     @F.pandas_udf(ArrayType(LongType()))
     def cells_within(x: pd.Series, y: pd.Series, radius: pd.Series) -> pd.Series:
         ix, iy = grid.xy_to_ij(x.to_numpy(np.float64), y.to_numpy(np.float64))

@@ -103,6 +103,9 @@ _INVERT = {  # mirrors SpatialPredicate::invert (spatial_predicate.rs:217-229)
 }
 
 
+_LE_POINT_HDR = b"\x01\x01\x00\x00\x00"  # little-endian XY POINT
+
+
 def _is_le_point_expr(col: str):
     """JVM-only exact XY-point test: 21 bytes + little-endian POINT header.
 
@@ -113,7 +116,7 @@ def _is_le_point_expr(col: str):
     or re-check the few offenders through the exact parser.
     """
     return (F.length(col) == 21) & (
-        F.expr(f"substring(`{col}`, 1, 5)") == F.lit(b"\x01\x01\x00\x00\x00")
+        F.expr(f"substring(`{col}`, 1, 5)") == F.lit(_LE_POINT_HDR)
     )
 
 
@@ -131,6 +134,49 @@ def _raise_on_nonpoint(bufs, valid, side: str, op: str) -> None:
                 f"{op}: {side} side must be point geometries "
                 "(non-point row beyond the sampled prefix)"
             )
+
+
+def _once(udf):
+    """Evaluate a pandas UDF once per row. Catalyst pushes a filter on a
+    UDF column (explicit, or the ``isnotnull`` inferred from a join key or
+    an ``explode``) below the Project and runs the UDF again inside it;
+    nothing is pushed through a nondeterministic expression, so the UDF
+    runs once — and a later filter stays above it too. The UDFs are pure,
+    so retries reproduce them. Refines, whose ``_ok`` is projected away
+    after its filter, already run once and stay deterministic."""
+    return udf.asNondeterministic()
+
+
+_XY = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
+
+
+def _point_xy(geom: Column, strict: Optional[tuple] = None,
+              grid: Optional[Grid] = None) -> Column:
+    """WKB point column -> ``struct<x, y>`` in one decode pass; NULL,
+    non-point and NaN coordinates are null. ``strict=(side, op)`` raises
+    on a non-NULL non-point row (routes decided by a sample). ``grid``
+    adds the ``cell`` (numpy, like the cover UDF; building a
+    ``tiling.cell_expr`` column costs ~0.1 s of planning time per join)."""
+    fields = _XY.fields + ([StructField("cell", LongType())] if grid is not None else [])
+
+    @F.pandas_udf(StructType(fields))
+    def point_xy(s: pd.Series) -> pd.DataFrame:
+        x, y, valid = wkb.decode_points_xy(list(s))
+        if strict is not None:
+            _raise_on_nonpoint(s, valid, *strict)
+        out = pd.DataFrame({"x": np.where(valid, x, np.nan),
+                            "y": np.where(valid, y, np.nan)})
+        if grid is not None:
+            ok = valid & ~np.isnan(x) & ~np.isnan(y)
+            # nullable Int64: None into an int64 Series would upcast to
+            # float64 and corrupt cell ids above 2^53
+            cell = pd.Series(grid.cell_of_points(np.where(ok, x, 0.0), np.where(ok, y, 0.0)),
+                             dtype="Int64")
+            cell[~ok] = pd.NA
+            out["cell"] = cell
+        return out
+
+    return _once(point_xy)(geom)
 
 
 def _bounds_udf():
@@ -152,7 +198,7 @@ def _bounds_udf():
                 out[i] = algos.bounds(wkb.parse(v))
         return pd.DataFrame(out, columns=["xmin", "ymin", "xmax", "ymax"])
 
-    return geom_bounds
+    return _once(geom_bounds)
 
 
 def add_bounds(df: DataFrame, geom_col: str, prefix: str = "") -> DataFrame:
@@ -163,62 +209,52 @@ def add_bounds(df: DataFrame, geom_col: str, prefix: str = "") -> DataFrame:
     return df.drop("_b")
 
 
-def _cell_of_points_udf(grid: Grid, geom_col: str):
-    @F.pandas_udf(LongType())
-    def cell_of(s: pd.Series) -> pd.Series:
-        x, y, valid = wkb.decode_points_xy(list(s))
-        cells = grid.cell_of_points(np.where(valid, x, 0.0), np.where(valid, y, 0.0))
-        # nullable Int64: None into an int64 Series would upcast to float64
-        # and corrupt cell ids above 2^53
-        out = pd.Series(cells, dtype="Int64")
-        out[~valid] = pd.NA
-        return out
-
-    return cell_of(F.col(geom_col))
-
-
-def _cover_cells_udf(grid: Grid, expand_col: Optional[str] = None):
-    """Geometry (+optional per-row expansion distance) -> array<long> cells."""
-
+def _cover_cells_udf(grid: Grid):
+    """(geometry, expansion distance) -> ``struct<x, y, cells>``: the
+    cells the expanded envelope overlaps (null for NULL/empty geometry or
+    NULL/NaN distance) and, for points, x/y — one pass decodes and covers
+    a point side. LE XY points are vectorised; other rows are parsed and
+    bounded exactly, one by one."""
     from pyspark.sql.types import ArrayType
 
-    if expand_col is None:
+    schema = StructType([*_XY.fields, StructField("cells", ArrayType(LongType()))])
 
-        @F.pandas_udf(ArrayType(LongType()))
-        def cover(s: pd.Series) -> pd.Series:
-            out = []
-            for v in s:
-                if v is None:
-                    out.append(None)
-                    continue
-                xmin, ymin, xmax, ymax = algos.bounds(wkb.parse(v))
-                if np.isnan(xmin):
-                    out.append(None)
-                    continue
-                out.append(grid.cover_env_cells(xmin, ymin, xmax, ymax).tolist())
-            return pd.Series(out, dtype=object)
+    @F.pandas_udf(schema)
+    def cover(s: pd.Series, d: pd.Series) -> pd.DataFrame:
+        n = len(s)
+        bufs = [None if v is None else bytes(v) for v in s]
+        x, y = np.full(n, np.nan), np.full(n, np.nan)
+        env = np.full((n, 4), np.nan)
+        fast = np.array([b is not None and len(b) == 21 and b[:5] == _LE_POINT_HDR
+                         for b in bufs], dtype=bool)
+        fi = np.nonzero(fast)[0]
+        if len(fi):
+            x[fi], y[fi], _ = wkb.decode_points_xy([bufs[i] for i in fi])
+            env[fi] = np.stack([x[fi], y[fi], x[fi], y[fi]], axis=1)
+        for i in np.nonzero(~fast)[0]:
+            if bufs[i] is None:
+                continue
+            g = wkb.parse(bufs[i])
+            env[i] = algos.bounds(g)
+            if g is not None and g.type_id == wkb.POINT and len(g.coords):
+                x[i], y[i] = g.coords[0, 0], g.coords[0, 1]
+        dd = d.to_numpy(np.float64, na_value=np.nan)
+        ok = ~np.isnan(env[:, 0]) & ~np.isnan(dd)
+        ix0, iy0, ix1, iy1 = grid.cover_env_ranges(
+            env[:, 0] - dd, env[:, 1] - dd, env[:, 2] + dd, env[:, 3] + dd)
+        # row-major (y outer, x inner) like Grid.cover_env_cells
+        w = np.where(ok, np.maximum(ix1 - ix0 + 1, 0), 0)
+        cnt = w * np.maximum(iy1 - iy0 + 1, 0)
+        row = np.repeat(np.arange(n), cnt)
+        k = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        cells = grid.pack(ix0[row] + k % w[row], iy0[row] + k // w[row])
+        parts = np.split(cells, np.cumsum(cnt)[:-1])
+        return pd.DataFrame({
+            "x": x, "y": y,
+            "cells": pd.Series([p if o else None for p, o in zip(parts, ok)], dtype=object),
+        })
 
-        return cover
-    else:
-
-        @F.pandas_udf(ArrayType(LongType()))
-        def cover(s: pd.Series, d: pd.Series) -> pd.Series:
-            out = []
-            for v, dd in zip(s, d):
-                if v is None or dd is None:
-                    out.append(None)
-                    continue
-                xmin, ymin, xmax, ymax = algos.bounds(wkb.parse(v))
-                if np.isnan(xmin):
-                    out.append(None)
-                    continue
-                dd = float(dd)
-                out.append(
-                    grid.cover_env_cells(xmin - dd, ymin - dd, xmax + dd, ymax + dd).tolist()
-                )
-            return pd.Series(out, dtype=object)
-
-        return cover
+    return _once(cover)
 
 
 def _is_axis_rect_wkb(v) -> bool:
@@ -742,47 +778,40 @@ def spatial_join(
     # lives entirely on the right side's covered envelope, so a point's own
     # cell is always matched (round 1 needlessly exploded points for
     # dwithin, which also dragged the PBSM dedup's bounds UDFs into the
-    # candidate stream)
+    # candidate stream). A point side is decoded ONCE: the struct<x, y,
+    # cell> feeds both the join key and the refine.
+    cover = _cover_cells_udf(grid)
     if left_is_points:
         if left_xy is not None:
-            px0 = F.col(f"_l_{left_xy[0]}").cast("double")
-            py0 = F.col(f"_l_{left_xy[1]}").cast("double")
-            Lc = L.withColumn("_cell", cell_expr(grid, px0, py0)).where(
-                px0.isNotNull() & py0.isNotNull()
+            px = F.col(f"_l_{left_xy[0]}").cast("double")
+            py = F.col(f"_l_{left_xy[1]}").cast("double")
+            Lc = L.withColumn("_cell", cell_expr(grid, px, py)).where(
+                px.isNotNull() & py.isNotNull()
             )
         else:
-            Lc = L.withColumn("_cell", _cell_of_points_udf(grid, lgeom)).where(
-                F.col("_cell").isNotNull()
-            )
+            Lc = (L.withColumn("_lxy", _point_xy(F.col(lgeom), grid=grid))
+                  .withColumn("_cell", F.col("_lxy.cell"))
+                  .where(F.col("_cell").isNotNull()))
+            px, py = F.col("_lxy.x"), F.col("_lxy.y")
         left_exploded = False
     else:
-        cover = _cover_cells_udf(grid)
         Lc = (
-            L.withColumn("_cells", cover(F.col(lgeom)))
-            .where(F.col("_cells").isNotNull())
-            .withColumn("_cell", F.explode("_cells"))
-            .drop("_cells")
+            L.withColumn("_lc", cover(F.col(lgeom), F.lit(0.0)))
+            .where(F.col("_lc.cells").isNotNull())
+            .withColumn("_cell", F.explode("_lc.cells"))
+            .drop("_lc")
         )
         left_exploded = True
 
-    if dist_col is not None:
-        cover_r = _cover_cells_udf(grid, expand_col=dist_col)
-        Rc = (
-            R.withColumn("_cells", cover_r(F.col(rgeom), F.col(dist_col)))
-            .where(F.col("_cells").isNotNull())
-            .withColumn("_cell", F.explode("_cells"))
-            .drop("_cells")
-        )
-        right_exploded = True
-    else:
-        cover_r = _cover_cells_udf(grid)
-        Rc = (
-            R.withColumn("_cells", cover_r(F.col(rgeom)))
-            .where(F.col("_cells").isNotNull())
-            .withColumn("_cell", F.explode("_cells"))
-            .drop("_cells")
-        )
-        right_exploded = True
+    Rc = (
+        R.withColumn("_rc", cover(F.col(rgeom),
+                                  F.col(dist_col) if dist_col else F.lit(0.0)))
+        .where(F.col("_rc.cells").isNotNull())
+        .select("*", F.col("_rc.x").alias("_rx"), F.col("_rc.y").alias("_ry"),
+                F.explode("_rc.cells").alias("_cell"))
+        .drop("_rc")
+    )
+    right_exploded = True
 
     # (broadcast decision moved above the planner sample — see the
     # round-4 comment there)
@@ -845,12 +874,6 @@ def spatial_join(
             refine = _refine_udf(predicate, False)
             cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom)))
         else:
-            if left_xy is not None:
-                px = F.col(f"_l_{left_xy[0]}").cast("double")
-                py = F.col(f"_l_{left_xy[1]}").cast("double")
-            else:
-                px = _point_x_expr(lgeom)
-                py = _point_y_expr(lgeom)
             if right_is_rects:
                 # pure-column point-in-rectangle refine (whole-stage codegen)
                 x0, y0, x1, y1 = (F.col(c) for c in ("_rx0", "_ry0", "_rx1", "_ry1"))
@@ -902,23 +925,14 @@ def spatial_join(
                     .limit(1).count() == 0
                 )
         if left_is_points and right_is_points:
-            # point x point: one vectorized decode + hypot per Arrow batch
-            # (the generic per-pair parser is ~50x slower here)
-            @F.pandas_udf(BooleanType())
-            def refine_pp(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
-                ax, ay, av = wkb.decode_points_xy(list(a))
-                bx, by, bv = wkb.decode_points_xy(list(b))
-                dd = d.to_numpy(dtype=np.float64, na_value=np.nan)
-                # sqrt(dx*dx + dy*dy), NOT hypot: hypot rounds differently
-                # (up to 1 ulp) from the expression any SQL oracle computes,
-                # so boundary-exact pairs could flip (ADVICE item 4)
-                dx, dy = ax - bx, ay - by
-                ok = av & bv & (np.sqrt(dx * dx + dy * dy) <= dd)
-                return pd.Series(ok)
-
+            # column refine on the decoded x/y, so it becomes the join
+            # condition. sqrt(dx*dx + dy*dy), NOT hypot: hypot rounds up to
+            # 1 ulp differently from a SQL oracle (ADVICE item 4). Spark
+            # orders NaN above every double (`x <= NaN` is true): guard it.
+            d = F.col(dist_col)
+            dx, dy = px - F.col("_rx"), py - F.col("_ry")
             cand = cand.withColumn(
-                "_ok", refine_pp(F.col(lgeom), F.col(rgeom), F.col(dist_col))
-            )
+                "_ok", (F.sqrt(dx * dx + dy * dy) <= d) & ~F.isnan(d))
         else:
             refine = _refine_udf("dwithin", True)
             cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom), F.col(dist_col)))
@@ -997,31 +1011,6 @@ def _cell_env_exprs(grid: Grid, cell_col: str):
 
     e = envs(m)
     return (e.getField("x0"), e.getField("y0"), e.getField("x1"), e.getField("y1"))
-
-
-def _point_x_expr(geom_col: str):
-    # little-endian IEEE754 double at offset 5 of a 21-byte point buffer;
-    # decoded in the pandas refine UDF instead when unavailable — here we
-    # use a tiny vectorized UDF to keep the candidate schema narrow
-    @F.pandas_udf(DoubleType())
-    def px(s: pd.Series) -> pd.Series:
-        x, _, valid = wkb.decode_points_xy(list(s))
-        out = pd.Series(x)
-        out[~valid] = None
-        return out
-
-    return px(F.col(geom_col))
-
-
-def _point_y_expr(geom_col: str):
-    @F.pandas_udf(DoubleType())
-    def py(s: pd.Series) -> pd.Series:
-        _, y, valid = wkb.decode_points_xy(list(s))
-        out = pd.Series(y)
-        out[~valid] = None
-        return out
-
-    return py(F.col(geom_col))
 
 
 _M_PER_DEG_LAT = 111194.9266  # pi/180 * mean earth radius
@@ -1164,25 +1153,23 @@ def _geog_cell_candidates(L, R, lg: str, rg: str, distance_m: float):
         ).cast("long")
 
     Lb = (
-        L.withColumn("_gy", _point_y_expr(lg))
-        .withColumn("_gx", _point_x_expr(lg))
-        .withColumn("_lb", F.floor(F.col("_gy") / F.lit(band_deg)).cast("long"))
+        L.withColumn("_gxy", _point_xy(F.col(lg)))
+        .withColumn("_lb", F.floor(F.col("_gxy.y") / F.lit(band_deg)).cast("long"))
     )
-    lonn_l = F.pmod(F.col("_gx") + F.lit(180.0), F.lit(360.0))
+    lonn_l = F.pmod(F.col("_gxy.x") + F.lit(180.0), F.lit(360.0))
     nlon_l = nlon_expr(F.col("_lb"))
     Lb = Lb.withColumn(
         "_cell",
         F.struct(
             F.col("_lb").alias("b"), lon_band(lonn_l, nlon_l).alias("l")
         ),
-    ).drop("_gy", "_gx", "_lb")
+    ).drop("_gxy", "_lb")
 
     Rb = (
-        R.withColumn("_gy", _point_y_expr(rg))
-        .withColumn("_gx", _point_x_expr(rg))
-        .withColumn("_rb0", F.floor(F.col("_gy") / F.lit(band_deg)).cast("long"))
+        R.withColumn("_gxy", _point_xy(F.col(rg)))
+        .withColumn("_rb0", F.floor(F.col("_gxy.y") / F.lit(band_deg)).cast("long"))
     )
-    lonn_r = F.pmod(F.col("_gx") + F.lit(180.0), F.lit(360.0))
+    lonn_r = F.pmod(F.col("_gxy.x") + F.lit(180.0), F.lit(360.0))
     cells = []
     for dt in (-1, 0, 1):
         tb = (F.col("_rb0") + F.lit(dt)).cast("long")
@@ -1197,7 +1184,7 @@ def _geog_cell_candidates(L, R, lg: str, rg: str, distance_m: float):
             )
     Rb = Rb.withColumn(
         "_cell", F.explode(F.array_distinct(F.array(*cells)))
-    ).drop("_gy", "_gx", "_rb0")
+    ).drop("_gxy", "_rb0")
     return Lb.join(Rb, on="_cell", how="inner").drop("_cell")
 
 
@@ -1312,7 +1299,8 @@ def geography_pip_join(
             out.append(list(range(lo, hi + 1)))
         return pd.Series(out, dtype=object)
 
-    Lb = L.withColumn("_band", F.floor(_point_y_expr(lg) / F.lit(band_deg)).cast("long"))
+    Lb = L.withColumn(
+        "_band", F.floor(_point_xy(F.col(lg)).getField("y") / F.lit(band_deg)).cast("long"))
     Rb = (
         R.withColumn("_bands", poly_bands(F.col(rg)))
         .where(F.col("_bands").isNotNull())

@@ -688,6 +688,13 @@ def _refs_outer_table(masked: str, a1: str, cols1, a2: str, cols2) -> bool:
     return False
 
 
+# spatial join predicates (any of them in a correlated EXISTS residual
+# would need a second index pass)
+_SPATIAL_JOIN_FN_RE = re.compile(
+    r"\b(" + "|".join(list(_SQL_PREDS) + ["st_dwithin"]) + r")\s*\(",
+    re.IGNORECASE)
+
+
 def _plan_exists(spark: SparkSession, sql: str, masked: str) -> Optional[DataFrame]:
     """``SELECT ... FROM a WHERE [NOT] EXISTS (SELECT ... FROM b WHERE
     ST_Pred(a.g, b.g) [AND inner-only conjuncts]) [AND residual] [tail]``
@@ -800,13 +807,13 @@ def _plan_exists(spark: SparkSession, sql: str, masked: str) -> Optional[DataFra
     # (round 5b; vanilla Catalyst CANNOT run these shapes either — it
     # decorrelates EXISTS into a semi join and then rejects the spatial
     # UDF conjunct with UNSUPPORTED_FEATURE.PYTHON_UDF_IN_ON_CLAUSE).
-    # Spatial-function residuals stay unplannable: they would need a
-    # second index pass.
+    # A second spatial JOIN predicate stays unplannable: it would need a
+    # second index pass. Scalar ST_ functions (ST_X, ST_Area, ...) are
+    # ordinary correlated residuals and take the post-join filter.
     corr_res, inner_only = [], []
     for x in inner_res:
         if _refs_outer_table(_mask_strings(x), a1, cols1, a2, cols2):
-            if re.search(r"\bST_[A-Za-z_0-9]+\s*\(", _mask_strings(x),
-                         re.IGNORECASE):
+            if _SPATIAL_JOIN_FN_RE.search(_mask_strings(x)):
                 raise NotImplementedError(
                     "spatial EXISTS subquery with a second correlated "
                     f"SPATIAL conjunct ({x.strip()!r}) is not plannable: "

@@ -2,11 +2,14 @@
 the left_xy + rectangle-layer spatial join producing a plan with zero
 Python evaluation."""
 
+import re
+
 import numpy as np
 
 from pyspark.sql import functions as F
 
 from sedona_db_spark.geometry import wkb
+from sedona_db_spark.operators.knn_join import knn_join
 from sedona_db_spark.operators.spatial_join import spatial_join
 from sedona_db_spark.tiling import Grid, cell_expr
 
@@ -74,6 +77,79 @@ def test_left_xy_rect_path_has_no_python_in_plan(spark):
     # is the one-off bounds computation on the 25-row rectangle layer
     probe_side = plan.split("BroadcastExchange")[0]
     assert "ArrowEvalPython" not in probe_side and "BatchEvalPython" not in probe_side
+
+
+_PY_NODE = re.compile(r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow)\b")
+
+
+def _python_calls(plan: str):
+    """Names of every Python function the plan evaluates, one entry per
+    call site: the top-level items of each ArrowEvalPython/BatchEvalPython
+    list plus each MapInPandas function."""
+    names = []
+    for m in _PY_NODE.finditer(plan):
+        rest = plan[m.end():].lstrip()
+        if m.group(1) in ("MapInPandas", "MapInArrow"):
+            names.append(re.match(r"(\w+)", rest).group(1))
+            continue
+        depth, item = 0, ""
+        for ch in rest[1:]:
+            if ch in "([":
+                depth += 1
+            elif ch in ")]":
+                if depth == 0:
+                    break
+                depth -= 1
+            if ch == "," and depth == 0:
+                names.append(re.match(r"\s*(\w+)", item).group(1))
+                item = ""
+            else:
+                item += ch
+        names.append(re.match(r"\s*(\w+)", item).group(1))
+    return names
+
+
+def _assert_each_udf_once(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = _python_calls(plan)
+    assert names, plan
+    dup = {n for n in names if names.count(n) > 1}
+    assert not dup, f"Python UDFs evaluated more than once: {dup}\n{plan}"
+    return plan
+
+
+def test_one_python_pass_per_point_side(spark):
+    rng = np.random.default_rng(5)
+    x, y = rng.uniform(0, 50, 400), rng.uniform(0, 50, 400)
+    pts = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(x, y))],
+        "pid LONG, geom BINARY")
+    tris = spark.createDataFrame(
+        [(i, wkb.encode(wkb.Geometry(wkb.POLYGON, [np.array(
+            [[10.0 * i, 0.0], [10.0 * i + 10, 0.0], [10.0 * i + 5, 50.0], [10.0 * i, 0.0]])])))
+         for i in range(5)],
+        "tid INT, geom BINARY")
+    bx, by = rng.uniform(0, 50, 100), rng.uniform(0, 50, 100)
+    build = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(bx, by))],
+        "bid LONG, geom BINARY")
+
+    # general-WKB point-in-polygon: one decode of the point side, one cover
+    pip = spatial_join(pts, tris, predicate="within", left_geom="geom", right_geom="geom")
+    _assert_each_udf_once(pip)
+
+    # point x point DWithin: one Python pass per side, refine in the JVM
+    dw = spatial_join(pts, build, predicate="dwithin", distance=2.0,
+                      left_geom="geom", right_geom="geom")
+    plan = _assert_each_udf_once(dw)
+    lines = plan.splitlines()
+    join_at = next(i for i, ln in enumerate(lines)
+                   if re.search(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", ln))
+    assert not any(_PY_NODE.search(ln) for ln in lines[:join_at]), plan
+
+    # broadcast kNN: the probe is decoded inside the solve pass
+    knn = knn_join(pts, build, k=3, probe_geom="geom", build_geom="geom")
+    assert _python_calls(_assert_each_udf_once(knn)) == ["solve"]
 
 
 def test_rect_touches_semantics(spark):

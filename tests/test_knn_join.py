@@ -324,3 +324,27 @@ def test_planar_eucl_prune_mirror_ties(spark):
     for i in range(len(px)):
         assert sorted(got[i]) == [(rk + 1, j) for rk, (j, _) in
                                   enumerate(want[i])], i
+
+
+def test_planar_eucl_prune_exact_at_large_offset(spark):
+    """Planar GEMM prune at a 1e8 coordinate offset: 200 build points
+    co-circular at radius 1000 around the probe. The uncentred key
+    p.b - |b|^2/2 carries ~eps*|coord|^2 of cancellation noise, enough
+    to cut the true nearest neighbour; the pruned path (k=1) must equal
+    the full-scan path (k large enough to disable the prune) row for row."""
+    off = 1e8
+    theta = 2 * np.pi * np.arange(200) / 200
+    bx, by = off + 1000 * np.cos(theta), off + 1000 * np.sin(theta)
+    px, py = np.array([off, off + 3.0]), np.array([off, off - 7.0])
+    P = spark.createDataFrame(
+        [(int(i), bytes(b)) for i, b in enumerate(wkb.encode_points_xy(px, py))],
+        SCHEMA).withColumnRenamed("id", "pid")
+    B = spark.createDataFrame(
+        [(int(i), bytes(b)) for i, b in enumerate(wkb.encode_points_xy(bx, by))],
+        SCHEMA).withColumnRenamed("id", "bid")
+    cols = ["pid", "bid", "knn_distance", "knn_rank"]
+    pruned = sorted(tuple(r) for r in knn_join(P, B, k=1, build_id="bid").select(*cols).collect())
+    full = sorted(tuple(r) for r in knn_join(P, B, k=200, build_id="bid")
+                  .where("knn_rank = 1").select(*cols).collect())
+    assert len(pruned) == 2
+    assert pruned == full

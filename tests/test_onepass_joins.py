@@ -1,0 +1,172 @@
+"""Differential tests of the one-Python-pass point join paths.
+
+Point sides are decoded once (a struct<x, y> UDF, or inside the kNN solve
+pass) and point x point DWithin is refined by a JVM column expression.
+Each fast path must return the same rows as its generic twin — the
+per-pair WKB refiner, or a brute-force kNN — on the inputs a decode can
+get wrong: NULL geometries, POINT EMPTY (NaN coordinates), big-endian and
+EWKB points, NaN and boundary-exact DWithin distances, and a non-point
+probe row past the planner's sample."""
+
+import struct
+
+import numpy as np
+import pytest
+
+from sedona_db_spark.geometry import wkb
+from sedona_db_spark.operators.knn_join import knn_join
+from sedona_db_spark.operators.spatial_join import spatial_join
+
+EMPTY = wkb.encode(wkb.from_wkt("POINT EMPTY"))
+
+
+def _be(x, y):
+    return b"\x00" + struct.pack(">I", 1) + struct.pack(">dd", x, y)
+
+
+def _ewkb(x, y):
+    return b"\x01" + struct.pack("<II", 0x20000001, 4326) + struct.pack("<dd", x, y)
+
+
+def _odd_points(n, seed):
+    """n little-endian points, then NULL, POINT EMPTY, big-endian and EWKB
+    rows (the odd rows trail, past any 200-row planner sample)."""
+    rng = np.random.default_rng(seed)
+    x, y = rng.uniform(0, 50, n), rng.uniform(0, 50, n)
+    geoms = [bytes(w) for w in wkb.encode_points_xy(x, y)]
+    geoms += [None, EMPTY, _be(10.0, 10.0), _ewkb(25.0, 30.25), _be(5.0, 0.0)]
+    return list(enumerate(geoms))
+
+
+def _rows(df, *cols):
+    return sorted((tuple(r) for r in df.select(*cols).collect()),
+                  key=lambda t: tuple((v is None, v) for v in t))
+
+
+@pytest.fixture(scope="module")
+def points(spark):
+    return spark.createDataFrame(_odd_points(300, 1), "pid LONG, geom BINARY")
+
+
+@pytest.fixture(scope="module")
+def triangles(spark):
+    rows = []
+    for i in range(5):
+        ring = np.array([[10.0 * i, 0.0], [10.0 * i + 10, 0.0], [10.0 * i + 5, 50.0],
+                         [10.0 * i, 0.0]])
+        rows.append((i, wkb.encode(wkb.Geometry(wkb.POLYGON, [ring]))))
+    return spark.createDataFrame(rows, "tid INT, geom BINARY")
+
+
+@pytest.mark.parametrize("pred", ["within", "intersects", "covered_by", "touches"])
+@pytest.mark.parametrize("bcast", [True, False])
+def test_point_in_polygon_matches_generic_refiner(points, triangles, pred, bcast):
+    kw = dict(predicate=pred, left_geom="geom", right_geom="geom", how="left",
+              broadcast_right=bcast, grid_level=6)
+    onepass = spatial_join(points, triangles, left_is_points=True, **kw)
+    generic = spatial_join(points, triangles, left_is_points=False, **kw)
+    got = _rows(onepass, "pid", "tid")
+    assert got == _rows(generic, "pid", "tid")
+    # the odd rows really went through: the BE point (5, 0) lies on the
+    # base edge of triangle 0, the EWKB point (25, 30.25) inside triangle 2
+    tids = {p: t for p, t in got}
+    if pred in ("intersects", "covered_by", "touches"):
+        assert tids[304] == 0
+    if pred != "touches":
+        assert tids[303] == 2
+
+
+def test_point_dwithin_matches_generic_refiner(spark, points):
+    rng = np.random.default_rng(2)
+    bx, by = rng.uniform(0, 50, 200), rng.uniform(0, 50, 200)
+    rgeoms = [bytes(w) for w in wkb.encode_points_xy(bx, by)]
+    dist = list(rng.uniform(0.5, 4.0, 200))
+    dist[3] = float("nan")
+    # trailing odd build rows; (13, 14) is exactly 5 from the BE probe (10, 10)
+    rgeoms += [_be(13.0, 14.0), _ewkb(25.5, 30.25), None, EMPTY]
+    dist += [5.0, 1.0, 1.0, 1.0]
+    build = spark.createDataFrame(
+        [(i, g, float(d)) for i, (g, d) in enumerate(zip(rgeoms, dist))],
+        "bid LONG, geom BINARY, d DOUBLE")
+    kw = dict(predicate="dwithin", left_geom="geom", right_geom="geom",
+              distance=build["d"], grid_level=6, broadcast_right=True)
+    onepass = spatial_join(points, build, left_is_points=True, **kw)
+    generic = spatial_join(points, build, left_is_points=False, **kw)
+    got = _rows(onepass, "pid", "bid")
+    assert got == _rows(generic, "pid", "bid")
+    assert (302, 200) in got and (303, 201) in got
+    assert not any(b == 3 for _, b in got)  # NaN distance matches nothing
+
+
+def test_point_dwithin_boundary_is_sqrt_of_squares(spark):
+    """The column refine keeps the oracle's IEEE ops: sqrt(dx*dx + dy*dy)
+    <= d, inclusive at the exact computed distance, NaN never matching."""
+    rng = np.random.default_rng(3)
+    lx, ly = rng.uniform(0, 10, 40), rng.uniform(0, 10, 40)
+    bx, by = rng.uniform(0, 10, 40), rng.uniform(0, 10, 40)
+    dx, dy = lx - bx, ly - by
+    d = np.sqrt(dx * dx + dy * dy)  # each build row exactly at its pair distance
+    d[::7] = np.nan
+    left = spark.createDataFrame(
+        [(i, bytes(w)) for i, w in enumerate(wkb.encode_points_xy(lx, ly))],
+        "pid LONG, geom BINARY")
+    right = spark.createDataFrame(
+        [(i, bytes(w), float(v)) for i, (w, v) in
+         enumerate(zip(wkb.encode_points_xy(bx, by), d))],
+        "bid LONG, geom BINARY, d DOUBLE")
+    got = spatial_join(left, right, predicate="dwithin", distance=right["d"],
+                       left_geom="geom", right_geom="geom", grid_level=4)
+    pairs = {(r["pid"], r["bid"]) for r in got.collect()}
+    want = set()
+    for i in range(40):
+        ddx, ddy = lx[i] - bx, ly[i] - by
+        ok = np.sqrt(ddx * ddx + ddy * ddy) <= d  # NaN compares False
+        want |= {(i, int(j)) for j in np.nonzero(ok)[0]}
+    assert pairs == want
+    assert {(i, i) for i in range(40) if i % 7} <= pairs
+
+
+def _brute_knn(probe_xy, bx, by, k):
+    out = []
+    for pid, (x, y) in probe_xy.items():
+        dx, dy = x - bx, y - by
+        d2 = dx * dx + dy * dy
+        order = np.lexsort((np.arange(len(bx)), d2))[:k]
+        out += [(pid, int(j), rk + 1) for rk, j in enumerate(order)]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("bt", [200_000, 0])  # broadcast solve, grid path
+def test_knn_one_pass_probe_matches_full_scan(spark, points, bt):
+    rng = np.random.default_rng(4)
+    bx, by = rng.uniform(0, 50, 200), rng.uniform(0, 50, 200)
+    build = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(bx, by))],
+        "bid LONG, geom BINARY")
+    res = knn_join(points, build, k=3, probe_geom="geom", build_geom="geom",
+                   build_id="bid", broadcast_threshold=bt, grid_level=5)
+    got = _rows(res, "pid", "bid", "knn_rank")
+    probe_xy = {}
+    for pid, g in _odd_points(300, 1):
+        x, y, ok = wkb.decode_points_xy([g])
+        if ok[0] and not np.isnan(x[0]):  # NULL / POINT EMPTY match nothing
+            probe_xy[pid] = (x[0], y[0])
+    assert 301 not in probe_xy and {302, 303, 304} <= set(probe_xy)
+    assert got == _brute_knn(probe_xy, bx, by, 3)
+
+
+@pytest.mark.parametrize("bt", [200_000, 0])
+def test_knn_nonpoint_probe_past_sample_raises(spark, bt):
+    rng = np.random.default_rng(6)
+    x, y = rng.uniform(0, 50, 1500), rng.uniform(0, 50, 1500)
+    geoms = [bytes(w) for w in wkb.encode_points_xy(x, y)]
+    geoms[1400] = wkb.encode(wkb.box(1.0, 1.0, 2.0, 2.0))
+    probe = spark.createDataFrame(list(enumerate(geoms)), "pid LONG, geom BINARY")
+    head = [r[0] for r in probe.select("geom").limit(1000).collect()]
+    assert all(len(g) == 21 for g in head)  # the polygon is past the sample
+    build = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(x[:50], y[:50]))],
+        "bid LONG, geom BINARY")
+    with pytest.raises(Exception, match="probe side must be point geometries"):
+        knn_join(probe, build, k=2, probe_geom="geom", build_geom="geom",
+                 broadcast_threshold=bt, grid_level=5).collect()

@@ -554,6 +554,26 @@ class TestExistsSubquery:
         want = sorted(list(base) + [p for p in dup_ids if p in base])
         assert got == want
 
+    def test_correlated_scalar_st_residual_filters_post_join(self, con, tables):
+        # a scalar ST_ accessor in a correlated residual is not a second
+        # join predicate: it takes the post-join filter instead of raising
+        pts, admin = tables
+        lon = {r["pid"]: r["lon"] for r in pts.select("pid", "lon").collect()}
+        pairs = _expected_pairs(pts, admin)
+        df = con.sql(
+            "SELECT p.pid AS pid FROM pts_t p WHERE EXISTS ("
+            " SELECT 1 FROM admin_t a "
+            " WHERE ST_Within(p.geom, a.geometry) AND ST_X(p.geom) > a.bid * 10 - 180)")
+        got = sorted(r["pid"] for r in df.collect())
+        assert got == sorted(p for p, b in pairs if lon[p] > b * 10 - 180)
+        df = con.sql(
+            "SELECT p.pid AS pid FROM pts_t p WHERE NOT EXISTS ("
+            " SELECT 1 FROM admin_t a "
+            " WHERE ST_Within(p.geom, a.geometry) AND ST_Area(a.geometry) > p.pid * 10)")
+        got = sorted(r["pid"] for r in df.collect())
+        matched = {p for p, _ in pairs if 72.0 * 36.0 > p * 10}
+        assert got == sorted(set(range(400)) - matched)
+
     def test_correlated_second_spatial_conjunct_raises(self, con, tables):
         # two spatial predicates in the subquery: only one can drive the
         # index — loud guidance, not a silent mis-plan
