@@ -321,6 +321,63 @@ def decode_headers(bufs: Sequence[Optional[bytes]]):
     return type_id, has_z, has_m, top_count, point_empty, valid
 
 
+# -- shape kinds: the route classifier of the joins -------------------------
+KIND_NULL, KIND_POINT, KIND_RECT, KIND_AREAL, KIND_OTHER = range(5)
+_LE_POINT_HDR = b"\x01\x01\x00\x00\x00"  # little-endian XY POINT
+
+
+def is_axis_rect(g: Geometry) -> bool:
+    """True iff ``g`` is a single-ring axis-aligned rectangle (5-point
+    closed ring, each edge parallel to an axis, positive area)."""
+    if g.type_id != POLYGON or len(g.coords) != 1 or len(g.coords[0]) != 5:
+        return False
+    ring = g.coords[0]
+    if not (ring[0][:2] == ring[-1][:2]).all():
+        return False
+    if len(set(ring[:4, 0].tolist())) != 2 or len(set(ring[:4, 1].tolist())) != 2:
+        return False
+    return bool(np.all((np.diff(ring[:, 0]) == 0) | (np.diff(ring[:, 1]) == 0)))
+
+
+def shape_kinds(bufs: Sequence[Optional[bytes]]) -> np.ndarray:
+    """Exact shape class of every WKB row as int8 codes: ``KIND_NULL``;
+    ``KIND_POINT`` (any byte order, ISO/EWKB dims and SRID, EMPTY
+    included); ``KIND_RECT`` (``is_axis_rect``); ``KIND_AREAL`` (any other
+    POLYGON/MULTIPOLYGON); ``KIND_OTHER`` — every other type and malformed
+    WKB, so the generic refine still raises its named error.
+
+    Little-endian XY points are recognised by their 5 header bytes, other
+    points from ``decode_headers`` alone. Polygonal rows are parsed,
+    because only a parse proves the body well-formed; header-invalid rows
+    get one parse attempt, so the answer equals ``parse``'s on every
+    input."""
+    kinds = np.full(len(bufs), KIND_POINT, dtype=np.int8)
+    rest = [(i, b) for i, b in enumerate(bufs)
+            if b is None or len(b) != _POINT_XY_NBYTES or b[:5] != _LE_POINT_HDR]
+    if not rest:
+        return kinds
+    rest, bufs = [i for i, _ in rest], [b for _, b in rest]
+    type_id, _, _, _, _, valid = decode_headers(bufs)
+    sub = np.where(valid & (type_id == POINT), KIND_POINT, KIND_OTHER).astype(np.int8)
+    for i in np.nonzero(~valid | (type_id == POLYGON) | (type_id == MULTIPOLYGON))[0]:
+        b = bufs[i]
+        if b is None:
+            sub[i] = KIND_NULL
+            continue
+        try:
+            g = parse(b)
+        except (ValueError, RecursionError):  # deeply nested garbage recurses
+            continue
+        if g.type_id == POINT:
+            sub[i] = KIND_POINT
+        elif is_axis_rect(g):
+            sub[i] = KIND_RECT
+        elif g.type_id in (POLYGON, MULTIPOLYGON):
+            sub[i] = KIND_AREAL
+    kinds[rest] = sub
+    return kinds
+
+
 def parse(buf: Optional[bytes]) -> Optional[Geometry]:
     """Parse one WKB buffer -> Geometry (None passes through). Malformed
     or truncated bytes raise ValueError — never a raw struct/index error

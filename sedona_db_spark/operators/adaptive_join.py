@@ -43,11 +43,7 @@ from pyspark.sql.types import ArrayType, LongType
 from ..geometry import algos, wkb
 from ..tiling import WORLD, Grid, cell_expr, adaptive_cover_env
 from .fanout import fan_out
-from .spatial_join import (
-    _is_axis_rect_wkb,
-    _point_in_polygon_refine_udf,
-    _point_xy,
-)
+from .spatial_join import _point_in_polygon_refine_udf, _point_xy
 
 
 def _adaptive_cover_udf(bounds, max_level: int, max_cells: int):
@@ -71,7 +67,7 @@ def _adaptive_cover_udf(bounds, max_level: int, max_cells: int):
                 xmin, ymin, xmax, ymax, bounds=bounds,
                 max_level=max_level, max_cells=max_cells,
             )
-            if full.any() and not _is_axis_rect_wkb(v):
+            if full.any() and not wkb.is_axis_rect(g):
                 # full == inside-the-ENVELOPE; only exact for axis rects.
                 # General geometries keep the mixed-level covering benefit
                 # but every candidate refines.

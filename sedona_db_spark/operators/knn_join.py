@@ -20,10 +20,11 @@ Distributed from scratch, we use ring expansion over the quadkey grid:
        batched numpy kernel for general geometries), and take
        `row_number() ≤ k` over `Window.partitionBy(probe)`.
 
-Build-side geometry modes (classified by one full exact scan, never by a
-sample alone):
-    * point   — all-JVM squared-distance rank key;
-    * rect    — axis-aligned rectangles: distance via
+Build-side geometry modes, a set test over the ``wkb.shape_kinds`` codes of
+EVERY build row (never a sample's) — on the driver from the capped collect,
+or by one Spark job (``spatial_join._side_kinds``) past the cap:
+    * point   — all-JVM squared-distance rank key (any point encoding);
+    * rect    — axis-aligned rectangles (and points): distance via
                 max(0, x0-px, px-x1) math, still pure-column;
     * general — exact `algos.points_to_geometry_distance` grouped by build
                 geometry per Arrow batch (envelope cells as prefilter).
@@ -48,7 +49,7 @@ from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, Stri
 
 from ..geometry import algos, wkb
 from ..tiling import Grid
-from .spatial_join import _once, _point_xy, _raise_on_nonpoint
+from .spatial_join import _once, _point_xy, _raise_on_nonpoint, _side_kinds
 
 
 def _points_xy(df: DataFrame, geom_col: str, xname: str, yname: str,
@@ -65,34 +66,49 @@ def _points_xy(df: DataFrame, geom_col: str, xname: str, yname: str,
             .drop("_xy"))
 
 
-def _classify_build(B: DataFrame, geom_col: str) -> str:
-    """'point' | 'rect' | 'general' — decided by a FULL exact scan of the
-    build side (a sample must never pick an unsafe fast path)."""
-    from .spatial_join import _is_axis_rect_wkb
-
-    @F.pandas_udf(StringType())
-    def gclass(s: pd.Series) -> pd.Series:
-        out = []
-        for v in s:
-            if v is None:
-                out.append("null")
-                continue
-            b = bytes(v)
-            if len(b) == 21 and b[0] == 1 and b[1] == wkb.POINT and b[2:5] == b"\x00\x00\x00":
-                out.append("point")
-            elif _is_axis_rect_wkb(b):
-                out.append("rect")
-            else:
-                out.append("general")
-        return pd.Series(out, dtype=object)
-
-    rows = B.select(gclass(F.col(geom_col)).alias("c")).groupBy("c").count().collect()
-    kinds = {r["c"] for r in rows if r["c"] != "null"}
-    if kinds <= {"point"}:
+def _build_mode(kinds) -> str:
+    """'point' | 'rect' | 'general' from the shape kinds of every build row
+    (NULL rows match nothing)."""
+    kinds = set(kinds) - {wkb.KIND_NULL}
+    if kinds <= {wkb.KIND_POINT}:
         return "point"
-    if kinds <= {"point", "rect"}:
+    if kinds <= {wkb.KIND_POINT, wkb.KIND_RECT}:
         return "rect"
     return "general"
+
+
+def _unit_xyz(lon, lat) -> np.ndarray:
+    """(n, 3) unit vectors of lon/lat degrees."""
+    lon, lat = np.radians(lon), np.radians(lat)
+    return np.stack([np.cos(lat) * np.cos(lon), np.cos(lat) * np.sin(lon),
+                     np.sin(lat)], axis=1)
+
+
+def _topk_frame(pdf, rows, cols, dv, k, bid, ties: bool, sqrt: bool):
+    """Emit each probe row's top k from candidate (probe row, build
+    position, rank key) triples, vectorised: one lexsort by (probe, key,
+    build position — the tie order), cut to k per probe by position.
+    ``ties``: every candidate comes back with its competition rank over
+    the key; the candidates hold every key up to the k-th, so that rank is
+    1 + the position of the first equal key. ``sqrt``: the key is a
+    squared distance."""
+    order = np.lexsort((cols, dv, rows))
+    rows, cols, dv = rows[order], cols[order], dv[order]
+    at = np.arange(len(rows))
+    pos = at - np.searchsorted(rows, np.arange(len(pdf)))[rows]
+    if ties:
+        first = np.ones(len(rows), dtype=bool)
+        first[1:] = (rows[1:] != rows[:-1]) | (dv[1:] != dv[:-1])
+        rank = pos - (at - np.maximum.accumulate(np.where(first, at, 0))) + 1
+        keep = np.ones(len(rows), dtype=bool)
+    else:
+        rank = pos + 1
+        keep = pos < k
+    out = pdf.iloc[rows[keep]].reset_index(drop=True)
+    out["_bid_m"] = bid[cols[keep]]
+    out["knn_distance"] = np.sqrt(dv[keep]) if sqrt else dv[keep]
+    out["knn_rank"] = rank[keep].astype(np.int32)
+    return out
 
 
 def _bounds_cols(df: DataFrame, geom_col: str) -> DataFrame:
@@ -146,8 +162,6 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
     jobs, which at bench scale dominate the wall time. persist() happens
     BEFORE the collect so the later rejoin on _bid_m reads the same
     materialization and synthetic ids cannot diverge (ADVICE item 1)."""
-    from .spatial_join import _is_axis_rect_wkb
-
     tie_col = f"_b_{build_id}" if build_id else "_bid"
     if brows is None:
         B = B.persist()
@@ -156,30 +170,11 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
     # (one driver job instead of count + collect)
     brows = [r for r in brows if r[build_geom_col] is not None]
     bufs = [bytes(r[build_geom_col]) for r in brows]
-    # exact driver-side classification of EVERY build geometry
-    mode = "point"
-    for b in bufs:
-        if len(b) == 21 and b[0] == 1 and b[1] == wkb.POINT and b[2:5] == b"\x00\x00\x00":
-            continue
-        g = wkb.parse(b)
-        if g is not None and g.type_id == wkb.POINT and len(g.coords):
-            continue
-        mode = "rect" if _is_axis_rect_wkb(b) else "general"
-        if mode == "general":
-            break
-    if mode == "rect":
-        # verify every row is point-or-rect; otherwise general
-        for b in bufs:
-            if not _is_axis_rect_wkb(b):
-                if not (len(b) == 21 and b[0] == 1 and b[1] == wkb.POINT):
-                    g = wkb.parse(b)
-                    if g is None or g.type_id != wkb.POINT:
-                        mode = "general"
-                        break
-    keep_idx = []
+    mode = _build_mode(wkb.shape_kinds(bufs).tolist())
     if mode == "point":
         x, y, valid = wkb.decode_points_xy(bufs)
-        keep_idx = np.nonzero(valid)[0]
+        # POINT EMPTY (NaN coordinates in LE, invalid otherwise) matches nothing
+        keep_idx = np.nonzero(valid & ~np.isnan(x) & ~np.isnan(y))[0]
         payload = (x[keep_idx], y[keep_idx])
     elif mode == "rect":
         bb = np.array([algos.bounds(wkb.parse(b)) for b in bufs])
@@ -220,34 +215,25 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
     def solve(batches):
         bid_, payload_ = bc.value
         parsed = [None]  # lazily parsed geometries (general mode)
-        uv = [None]  # lazily built build-side unit vectors (chord prune)
         n_build_local = max(1, len(bid_))
-        # Spheroid point-kNN prune: haversine rank order is MONOTONE in
-        # the 3D chord between unit vectors, and chord ranking needs only
-        # a (batch x 3) @ (3 x n_build) GEMM — BLAS flops instead of ~6
-        # transcendentals per pair. Candidates = every build point whose
-        # cosine similarity reaches the kk-th largest (>= comparison, so
-        # whole chord-tie groups survive the cut); the exact haversine
-        # formula then scores ONLY candidates, keeping final distances
-        # and tie-breaks bit-identical to the full scan.
+        # Point-kNN prune: rank the build side by one (batch x 3) @
+        # (3 x n_build) GEMM key — BLAS flops instead of a full distance
+        # matrix — keep every key within a rounding bound of the kk-th
+        # largest, then re-score only those candidates with the exact
+        # distance ops of the full path, so distances and tie-breaks are
+        # bit-identical to it.
+        #  * spheroid: haversine order is monotone in the 3D chord between
+        #    unit vectors, i.e. in their cosine similarity p . b;
+        #  * planar: -d^2/2 = p . b - |b|^2/2 - |p|^2/2, and |p|^2 is
+        #    constant per probe row, so the key is [px py 1] @
+        #    [bx; by; -|b|^2/2], centred on the build centroid c (the raw
+        #    key cancels catastrophically at large offsets, ~eps*|coord|^2).
+        # The bound 32 eps (|p - c| + max|b - c|)^2 covers the key, the
+        # centring and the exact re-score; for unit vectors (c = 0) it is
+        # 128 eps, so near-ties whose keys differ in the last ulps survive.
         kk_prune = min(n_build_local, max(2 * k_eff, k_eff + 16))
-        chord_prune = (
-            mode == "point" and use_spheroid and not include_ties
-            and n_build_local > 4 * kk_prune)
-        # Planar analogue: -d^2/2 = (p . b) - |b|^2/2 - |p|^2/2, and the
-        # |p|^2 term is constant per probe row, so ranking by the GEMM
-        # [px py 1] @ [bx; by; -|b|^2/2] is ranking by euclidean distance.
-        # The key is centred on the build centroid: at large offsets the
-        # raw key cancels catastrophically (~eps*|coord|^2 of noise). The
-        # cut keeps every key within a rounding bound of the kk-th largest
-        # (bound: 32 eps (|p - c| + max|b - c|)^2, covering the GEMM, the
-        # centring and the exact d^2 below), so no full-scan neighbour can
-        # fall below it. Exact d^2 on the ORIGINAL coordinates (same
-        # subtract/multiply ops as the full path) then re-scores the
-        # candidates only.
-        eucl_prune = (
-            mode == "point" and not use_spheroid and not include_ties
-            and n_build_local > 4 * kk_prune)
+        prune = (mode == "point" and not include_ties
+                 and n_build_local > 4 * kk_prune)
         # PREALLOCATED per-worker scratch, written with np.ufunc(out=...):
         # in this environment fresh mmap'd temporaries page-fault at
         # ~100 MB/s on first touch (VM demand paging), and glibc re-mmaps
@@ -262,84 +248,49 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
         buf_p = np.empty(shape)
         buf_m = np.empty(shape, dtype=bool)
 
+        if prune and use_spheroid:
+            key, cx, cy, rmax = np.ascontiguousarray(_unit_xyz(*payload_).T), 0.0, 0.0, 1.0
+        elif prune:
+            bx_, by_ = payload_
+            fin = np.isfinite(bx_) & np.isfinite(by_)
+            cx = float(bx_[fin].mean()) if fin.any() else 0.0
+            cy = float(by_[fin].mean()) if fin.any() else 0.0
+            bxc, byc = bx_ - cx, by_ - cy
+            rmax = float(np.hypot(bxc[fin], byc[fin]).max()) if fin.any() else 0.0
+            key = np.ascontiguousarray(np.stack([bxc, byc, -(bxc * bxc + byc * byc) / 2.0]))
+
+        def solve_pruned(pdf, px, py):
+            n = len(px)
+            bx_, by_ = payload_
+            if use_spheroid:
+                pk, pr = _unit_xyz(px, py), 1.0
+            else:
+                pxc, pyc = px - cx, py - cy
+                pk, pr = np.stack([pxc, pyc, np.ones(n)], axis=1), np.hypot(pxc, pyc)
+            G = np.dot(pk, key, out=buf_d[:n])
+            cut = n_build_local - kk_prune
+            part = buf_p[:n]
+            np.copyto(part, G)
+            part.partition(cut, axis=1)
+            slack = 32 * np.finfo(np.float64).eps * (pr + rmax) ** 2
+            mask = buf_m[:n]
+            np.greater_equal(G, (part[:, cut] - slack)[:, None], out=mask)
+            rows, cols = np.nonzero(mask)
+            if use_spheroid:
+                dv = algos.haversine_m(px[rows], py[rows], bx_[cols], by_[cols])
+            else:
+                dvx = px[rows] - bx_[cols]
+                dvy = py[rows] - by_[cols]
+                dv = dvx * dvx + dvy * dvy  # squared rank key
+            return _topk_frame(pdf, rows, cols, dv, k_eff, bid_, False, not use_spheroid)
+
         def solve_block(pdf, px, py):
+            if prune:
+                return solve_pruned(pdf, px, py)
             n = len(px)
             dx, dy, d = buf_a[:n], buf_b[:n], buf_d[:n]
             if mode == "point":
                 bx_, by_ = payload_
-                if use_spheroid and chord_prune:
-                    if uv[0] is None:
-                        blon = np.radians(bx_)
-                        blat = np.radians(by_)
-                        uv[0] = np.ascontiguousarray(np.stack(
-                            [np.cos(blat) * np.cos(blon),
-                             np.cos(blat) * np.sin(blon),
-                             np.sin(blat)], axis=0))  # (3, n_build)
-                    plon = np.radians(px)
-                    plat = np.radians(py)
-                    pxyz = np.stack(
-                        [np.cos(plat) * np.cos(plon),
-                         np.cos(plat) * np.sin(plon),
-                         np.sin(plat)], axis=1)
-                    G = np.dot(pxyz, uv[0], out=buf_d[:n])
-                    cut = n_build_local - kk_prune
-                    np.copyto(buf_p[:n], G)
-                    part = buf_p[:n]
-                    part.partition(cut, axis=1)
-                    Gkth = part[:, cut]  # kk-th LARGEST similarity
-                    mask = buf_m[:n]
-                    np.greater_equal(G, Gkth[:, None], out=mask)
-                    rows, cols = np.nonzero(mask)
-                    dv = algos.haversine_m(
-                        px[rows], py[rows], bx_[cols], by_[cols])
-                    order = np.lexsort((cols, dv, rows))
-                    rows, cols, dv = rows[order], cols[order], dv[order]
-                    starts = np.searchsorted(rows, np.arange(len(px)))
-                    pos_in_row = np.arange(len(rows)) - starts[rows]
-                    keep = pos_in_row < k_eff
-                    idx_rows, idx_cols = rows[keep], cols[keep]
-                    out = pdf.iloc[idx_rows].reset_index(drop=True)
-                    out["_bid_m"] = bid_[idx_cols]
-                    out["knn_distance"] = dv[keep]
-                    out["knn_rank"] = (pos_in_row[keep] + 1).astype(np.int32)
-                    return out
-                if not use_spheroid and eucl_prune:
-                    if uv[0] is None:
-                        fin = np.isfinite(bx_) & np.isfinite(by_)
-                        cx = float(bx_[fin].mean()) if fin.any() else 0.0
-                        cy = float(by_[fin].mean()) if fin.any() else 0.0
-                        bxc, byc = bx_ - cx, by_ - cy
-                        rmax = float(np.hypot(bxc[fin], byc[fin]).max()) if fin.any() else 0.0
-                        uv[0] = (np.ascontiguousarray(np.stack(
-                            [bxc, byc, -(bxc * bxc + byc * byc) / 2.0],
-                            axis=0)), cx, cy, rmax)  # (3, n_build)
-                    key, cx, cy, rmax = uv[0]
-                    pxc, pyc = px - cx, py - cy
-                    pxyz = np.stack([pxc, pyc, np.ones(n)], axis=1)
-                    G = np.dot(pxyz, key, out=buf_d[:n])
-                    cut = n_build_local - kk_prune
-                    np.copyto(buf_p[:n], G)
-                    part = buf_p[:n]
-                    part.partition(cut, axis=1)
-                    slack = 32 * np.finfo(np.float64).eps * (np.hypot(pxc, pyc) + rmax) ** 2
-                    Gkth = part[:, cut] - slack
-                    mask = buf_m[:n]
-                    np.greater_equal(G, Gkth[:, None], out=mask)
-                    rows, cols = np.nonzero(mask)
-                    dvx = px[rows] - bx_[cols]
-                    dvy = py[rows] - by_[cols]
-                    dv = dvx * dvx + dvy * dvy  # squared rank key
-                    order = np.lexsort((cols, dv, rows))
-                    rows, cols, dv = rows[order], cols[order], dv[order]
-                    starts = np.searchsorted(rows, np.arange(len(px)))
-                    pos_in_row = np.arange(len(rows)) - starts[rows]
-                    keep = pos_in_row < k_eff
-                    idx_rows, idx_cols = rows[keep], cols[keep]
-                    out = pdf.iloc[idx_rows].reset_index(drop=True)
-                    out["_bid_m"] = bid_[idx_cols]
-                    out["knn_distance"] = np.sqrt(dv[keep])
-                    out["knn_rank"] = (pos_in_row[keep] + 1).astype(np.int32)
-                    return out
                 if use_spheroid:
                     d = algos.haversine_m(px[:, None], py[:, None], bx_[None, :], by_[None, :])
                 else:
@@ -381,47 +332,15 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
                     for j, g in enumerate(parsed[0]):
                         dj = algos.points_to_geometry_distance(px, py, g)
                         d[:, j] = dj * dj
-            # fully vectorized top-k: candidates within the k-th distance
-            # (boundary ties included), globally lexsorted by (probe,
-            # distance, tie-position), cut to k per probe by position —
-            # zero per-probe Python (round-1 perf item)
-            scratch = buf_p[:n]
-            np.copyto(scratch, d)
-            if include_ties:
-                scratch.sort(axis=1)
-                sorted_d = scratch
-                kth = sorted_d[:, k_eff - 1]
-            else:
-                scratch.partition(k_eff - 1, axis=1)
-                kth = scratch[:, k_eff - 1]
+            # candidates: every key up to the k-th (boundary ties included)
+            kth = buf_p[:n]
+            np.copyto(kth, d)
+            kth.partition(k_eff - 1, axis=1)
             mask = buf_m[:n]
-            np.less_equal(d, kth[:, None], out=mask)
+            np.less_equal(d, kth[:, k_eff - 1, None], out=mask)
             rows, cols = np.nonzero(mask)
-            dv = d[rows, cols]
-            order = np.lexsort((cols, dv, rows))
-            rows, cols, dv = rows[order], cols[order], dv[order]
-            starts = np.searchsorted(rows, np.arange(len(px)))
-            pos_in_row = np.arange(len(rows)) - starts[rows]
-            if include_ties:
-                # competition rank over distance only; equidistant rows all
-                # come back (`knn_include_tie_breakers` in the reference)
-                ranks = np.empty(len(rows), dtype=np.int64)
-                for i in range(len(px)):
-                    lo = starts[i]
-                    hi = starts[i + 1] if i + 1 < len(px) else len(rows)
-                    if hi > lo:
-                        ranks[lo:hi] = np.searchsorted(sorted_d[i], dv[lo:hi], side="left") + 1
-                keep = np.ones(len(rows), dtype=bool)
-            else:
-                ranks = pos_in_row + 1
-                keep = pos_in_row < k_eff
-            idx_rows, idx_cols = rows[keep], cols[keep]
-            out = pdf.iloc[idx_rows].reset_index(drop=True)
-            out["_bid_m"] = bid_[idx_cols]
-            dd = dv[keep]
-            out["knn_distance"] = dd if use_spheroid else np.sqrt(dd)
-            out["knn_rank"] = ranks[keep].astype(np.int32)
-            return out
+            return _topk_frame(pdf, rows, cols, d[rows, cols], k_eff, bid_,
+                               include_ties, not use_spheroid)
 
         # probes stream through in blocks matching the preallocated scratch
         for pdf0 in batches:
@@ -539,15 +458,9 @@ def knn_join(
     # type-check would double the job, so the guard is a 1k sample + the
     # strict decode in the probe's one Python pass. The sample reads the
     # RAW probe: P is groupBy-collapsed, so sampling it runs a shuffle.
-    psample = [
-        r[0] for r in probe.select(probe_geom).limit(1000).collect() if r[0] is not None
-    ]
-    for v in psample:
-        b = bytes(v)
-        if not (len(b) == 21 and b[0] == 1 and b[1] == wkb.POINT and b[2:5] == b"\x00\x00\x00"):
-            g = wkb.parse(b)
-            if g is None or g.type_id != wkb.POINT:
-                raise NotImplementedError("knn_join probe side must be point geometries")
+    psample = [r[0] for r in probe.select(probe_geom).limit(1000).collect()]
+    if not np.all(np.isin(wkb.shape_kinds(psample), (wkb.KIND_NULL, wkb.KIND_POINT))):
+        raise NotImplementedError("knn_join probe side must be point geometries")
 
     bgeom = f"_b_{build_geom}"
 
@@ -576,7 +489,7 @@ def knn_join(
             build_geom_col=bgeom, probe_geom_col=f"_p_{probe_geom}", brows=_head,
         )
     n_build = B.count()
-    mode = _classify_build(B, bgeom)
+    mode = _build_mode(_side_kinds(B, bgeom))
     if n_build <= broadcast_threshold and (mode != "general" or use_spheroid):
         return _broadcast_knn(
             spark, P, B, k, pcols, bcols, build_id,

@@ -32,6 +32,19 @@ instead of the reference's visited-bitmap).
 Distance joins (ST_DWithin) expand the probe envelope by the distance
 before covering — the analogue of `operand_evaluator.rs:307`
 (`expand_rect_in_place`).
+
+Kernel dispatch by argument type: every route decision (point left side,
+rectangle / areal / point right side, the geography point-left check, the
+kNN build mode) is a set test over the ``wkb.shape_kinds`` codes of one
+side, and a fast route needs the codes of EVERY row, never a sample's:
+
+* a collected side (broadcast right, kNN build, samples) is classified
+  on the driver in full;
+* a non-broadcast right side is classified by one Spark job
+  (``_side_kinds``), run only when the free 1000-row sample allows a fast
+  route;
+* the left/probe side is confirmed in the JVM (``_point_offenders``):
+  only the rows that are not little-endian XY points are classified.
 """
 
 from __future__ import annotations
@@ -44,6 +57,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType,
+    ByteType,
     DoubleType,
     LongType,
     StructField,
@@ -72,15 +86,17 @@ def _wide_id(seed: int, cols):
     )
 
 
-def _estimate_bytes(df: DataFrame, geom_col: str) -> float:
-    """Estimated geometry payload bytes (row count x avg WKB + overhead) —
-    the broadcast decision input, like spark.sql.autoBroadcastJoinThreshold
-    but measured on the actual geometry column."""
+def _estimate_bytes(df: DataFrame, geom_col: str):
+    """``(rows, estimated geometry payload bytes)`` — row count x (avg WKB
+    + 64 B of per-row overhead), the broadcast decision input, like
+    spark.sql.autoBroadcastJoinThreshold but measured on the actual
+    geometry column."""
     stats = df.agg(
         F.count("*").alias("n"),
         F.avg(F.length(F.col(geom_col))).alias("avg_wkb"),
     ).collect()[0]
-    return int(stats["n"] or 0) * (float(stats["avg_wkb"] or 0.0) + 64.0)
+    n = int(stats["n"] or 0)
+    return n, n * (float(stats["avg_wkb"] or 0.0) + 64.0)
 
 RELATION_FNS = {
     "intersects": algos.intersects,
@@ -105,35 +121,69 @@ _INVERT = {  # mirrors SpatialPredicate::invert (spatial_predicate.rs:217-229)
 
 _LE_POINT_HDR = b"\x01\x01\x00\x00\x00"  # little-endian XY POINT
 
+# predicates with a point x polygon kernel (left point PRED right polygon)
+_PIP_PREDS = ("within", "covered_by", "intersects", "touches")
+_AREAL_KINDS = {wkb.KIND_RECT, wkb.KIND_AREAL}
+_POINT_KINDS = {wkb.KIND_NULL, wkb.KIND_POINT}
+
 
 def _is_le_point_expr(col: str):
-    """JVM-only exact XY-point test: 21 bytes + little-endian POINT header.
-
-    This is the full-scan CONFIRM used by every point fast path (sample
-    DECIDES, full scan CONFIRMS — round-3 discipline): one narrow
-    whole-stage-codegen scan, zero Python. Big-endian/EWKB points fail
-    this test on purpose — callers either fall back to the generic path
-    or re-check the few offenders through the exact parser.
-    """
+    """JVM-only exact little-endian XY-point test: 21 bytes + LE POINT
+    header — one narrow whole-stage-codegen scan, zero Python. Rows that
+    fail it are not necessarily non-points (big-endian, EWKB and Z/M
+    points fail it too); ``_point_offenders`` and ``_side_kinds`` hand
+    exactly those rows to ``wkb.shape_kinds``."""
     return (F.length(col) == 21) & (
         F.expr(f"substring(`{col}`, 1, 5)") == F.lit(_LE_POINT_HDR)
     )
 
 
+_OFFENDER_CAP = 20  # non-LE-point rows a point route may admit
+
+
+def _point_offenders(df: DataFrame, col: str) -> np.ndarray:
+    """Shape kinds of up to ``_OFFENDER_CAP + 1`` non-NULL rows of
+    ``df[col]`` that fail ``_is_le_point_expr``, by one limit-ed JVM-only
+    scan. When at most ``_OFFENDER_CAP`` come back they are ALL such rows,
+    so the point test over them is a full confirm of the side. The rows
+    come back through an aggregate: a plain ``collect`` of a limit would
+    scan a side with no offenders in serial waves of 1, 4, 16, ...
+    partitions, one job each; this plan is two jobs at any width."""
+    rows = (df.where(F.col(col).isNotNull() & ~_is_le_point_expr(col))
+            .limit(_OFFENDER_CAP + 1).agg(F.collect_list(col)).collect()[0][0])
+    return wkb.shape_kinds(rows)
+
+
+def _side_kinds(df: DataFrame, col: str) -> set:
+    """Every ``wkb.shape_kinds`` code present in ``df[col]``, by one Spark
+    job. LE XY points are told apart in the JVM and reach the Python
+    classifier as NULL, so a point side ships no WKB to Python."""
+    le = _is_le_point_expr(col)
+
+    @F.pandas_udf(ByteType())
+    def kinds(s: pd.Series) -> pd.Series:
+        return pd.Series(wkb.shape_kinds(s))
+
+    k = F.when(le, F.lit(wkb.KIND_POINT)).otherwise(kinds(F.when(~le, F.col(col))))
+    return {int(r[0]) for r in df.select(k.alias("k")).distinct().collect()}
+
+
 def _raise_on_nonpoint(bufs, valid, side: str, op: str) -> None:
-    """Strict-decode guard for point-kernel refines: any NON-NULL row that
-    failed the point decode raises loudly instead of being masked out
-    (the sample-decided route means rows beyond the sampled prefix would
-    otherwise silently drop — ADVICE r3 medium). Vectorized: the common
-    all-valid batch never enters the Python loop."""
+    """Strict-decode guard for point-kernel refines: a NON-NULL row whose
+    shape kind is not POINT raises loudly instead of being masked out
+    (routes checked on a sample or a capped offender scan would otherwise
+    silently drop rows beyond it — ADVICE r3 medium). NULL and POINT EMPTY
+    rows decode invalid in every encoding and pass. Vectorized: the common
+    all-valid batch returns at once."""
     if bool(np.all(valid)):
         return
-    for b, ok in zip(bufs, valid):
-        if b is not None and not ok:
-            raise ValueError(
-                f"{op}: {side} side must be point geometries "
-                "(non-point row beyond the sampled prefix)"
-            )
+    bufs = list(bufs)
+    kinds = wkb.shape_kinds([bufs[i] for i in np.nonzero(~np.asarray(valid))[0]])
+    if np.any((kinds != wkb.KIND_NULL) & (kinds != wkb.KIND_POINT)):
+        raise ValueError(
+            f"{op}: {side} side must be point geometries "
+            "(non-point row beyond the sampled prefix)"
+        )
 
 
 def _once(udf):
@@ -201,14 +251,6 @@ def _bounds_udf():
     return _once(geom_bounds)
 
 
-def add_bounds(df: DataFrame, geom_col: str, prefix: str = "") -> DataFrame:
-    b = _bounds_udf()(F.col(geom_col)).alias("_b")
-    df = df.withColumn("_b", b)
-    for c in ("xmin", "ymin", "xmax", "ymax"):
-        df = df.withColumn(prefix + c, F.col(f"_b.{c}"))
-    return df.drop("_b")
-
-
 def _cover_cells_udf(grid: Grid):
     """(geometry, expansion distance) -> ``struct<x, y, cells>``: the
     cells the expanded envelope overlaps (null for NULL/empty geometry or
@@ -255,53 +297,6 @@ def _cover_cells_udf(grid: Grid):
         })
 
     return _once(cover)
-
-
-def _is_axis_rect_wkb(v) -> bool:
-    """True iff the WKB is a single-ring axis-aligned rectangle (5-point
-    closed ring, each edge parallel to an axis, positive area)."""
-    try:
-        g = wkb.parse(bytes(v))
-    except Exception:
-        return False
-    if g is None or g.type_id != wkb.POLYGON or len(g.coords) != 1:
-        return False
-    ring = g.coords[0]
-    if len(ring) != 5:
-        return False
-    if not (ring[0][:2] == ring[-1][:2]).all():
-        return False
-    xs = set(float(x) for x in ring[:4, 0])
-    ys = set(float(y) for y in ring[:4, 1])
-    if len(xs) != 2 or len(ys) != 2:
-        return False
-    for i in range(4):
-        dx = ring[i + 1, 0] - ring[i, 0]
-        dy = ring[i + 1, 1] - ring[i, 1]
-        if dx != 0 and dy != 0:
-            return False
-    return True
-
-
-def estimate_env_stats(df: DataFrame, geom_col: str, sample_rows: int = 1000):
-    """Sample envelope widths/heights + bounds (speculative stats, cf.
-    `refine/exec_mode_selector.rs`: reference samples ~1000 probe geoms)."""
-    rows = df.select(geom_col).limit(sample_rows).collect()
-    widths, heights = [], []
-    gxmin = gymin = np.inf
-    gxmax = gymax = -np.inf
-    for r in rows:
-        v = r[0]
-        if v is None:
-            continue
-        xmin, ymin, xmax, ymax = algos.bounds(wkb.parse(v))
-        if np.isnan(xmin):
-            continue
-        widths.append(xmax - xmin)
-        heights.append(ymax - ymin)
-        gxmin, gymin = min(gxmin, xmin), min(gymin, ymin)
-        gxmax, gymax = max(gxmax, xmax), max(gymax, ymax)
-    return np.array(widths), np.array(heights), (gxmin, gymin, gxmax, gymax)
 
 
 def _refine_udf(predicate: str, distance_expr_is_col: bool):
@@ -513,43 +508,9 @@ def spatial_join(
                 left, right, distance_m=float(distance),
                 left_geom=left_geom, right_geom=right_geom, how=how,
             )
-        lsample = [
-            r[0] for r in left.select(left_geom).limit(200).collect()
-            if r[0] is not None
-        ]
-
-        def _sampled_point(v) -> bool:
-            b = bytes(v)
-            if len(b) == 21 and b[0] == 1 and b[1] == wkb.POINT:
-                return True
-            g = wkb.parse(b)  # big-endian/EWKB points are still points
-            return g is not None and g.type_id == wkb.POINT
-
-        left_pts = bool(lsample) and all(_sampled_point(v) for v in lsample)
-        if left_pts:
-            # The sample DECIDES the point-left route; a JVM-only full scan
-            # CONFIRMS it (same discipline as the planar left_is_points
-            # path): a heterogeneous left side — points first, polygons
-            # past the sampled prefix — must fail at plan time, never drop
-            # silently in the refine. Rows failing the LE-header test are
-            # re-checked through the exact parser so big-endian/EWKB
-            # points do not cause a false rejection; anything truly
-            # non-point beyond this look is still caught by the refine's
-            # strict decode.
-            offenders = (
-                left.where(
-                    F.col(left_geom).isNotNull() & ~_is_le_point_expr(left_geom)
-                )
-                .select(left_geom)
-                .limit(20)
-                .collect()
-            )
-            for r in offenders:
-                g = wkb.parse(bytes(r[0]))
-                if g is None or g.type_id != wkb.POINT:
-                    left_pts = False
-                    break
-        if not left_pts:
+        # Point left side, confirmed in the JVM; rows past the offender cap
+        # are caught by the refine's strict decode.
+        if not np.all(_point_offenders(left, left_geom) == wkb.KIND_POINT):
             raise NotImplementedError(
                 "geography relation joins support a POINT left side vs a "
                 "polygon right side (great-circle PIP); for other shapes "
@@ -611,50 +572,33 @@ def spatial_join(
     rgeom = f"_r_{right_geom}"
     dist_col = "_dist" if predicate == "dwithin" else None
 
-    # --- broadcast decision FIRST (round 4: it used to come after the
-    # planner sample + rect/areal confirm jobs; when the right side is
-    # going to be broadcast anyway — the dominant small-dim-layer shape —
-    # ONE driver collect now serves EVERY planner decision: grid-level
-    # stats, the rect/areal/point full-coverage confirms (exact,
-    # driver-side, replacing one small Spark job each) and the PIP
-    # refine's id->WKB map. Warm small-join latency was 3-5 driver jobs
-    # per call; it is now 1 when broadcasting, unchanged when not.)
+    # --- broadcast decision FIRST: when the right side is broadcast, ONE
+    # driver collect serves every planner decision — grid-level stats, the
+    # right side's shape kinds and the PIP refine's id->WKB map.
     if broadcast_right is None:
         # BYTE-based, like spark.sql.autoBroadcastJoinThreshold: estimated
         # geometry payload (row count x avg WKB size) must fit a broadcast.
         # The round-1 build used a bare 2M-row threshold, which at ~1 KB of
         # WKB per polygon pushes GBs through the driver (VERDICT item 2).
         try:
-            stats = R.agg(
-                F.count("*").alias("n"),
-                F.avg(F.length(F.col(rgeom))).alias("avg_wkb"),
-            ).collect()[0]
-            n_r = int(stats["n"] or 0)
-            avg_wkb = float(stats["avg_wkb"] or 0.0)
-            est_bytes = n_r * (avg_wkb + 64.0)  # + per-row overhead
-            broadcast_right = est_bytes <= BROADCAST_BYTES_CAP
+            broadcast_right = _estimate_bytes(R, rgeom)[1] <= BROADCAST_BYTES_CAP
         except Exception:
             broadcast_right = False
 
     rs_cols = [rgeom] + ([dist_col] if dist_col else [])
     _rmap = None           # broadcast id->WKB map (set iff broadcast_right)
-    _r_has_null_geom = False
     if broadcast_right:
         # byte-capped by the decision above (or asserted by the caller,
         # same contract as F.broadcast); _rid is content-derived so this
         # collect pairs exactly with the candidate plan's ids
         _rsample_rows = R.select(*rs_cols, "_rid").collect()
-        rsample_geoms = [r[0] for r in _rsample_rows if r[0] is not None]
-        _r_has_null_geom = any(r[0] is None for r in _rsample_rows)
         _rmap = {int(r[-1]): bytes(r[0]) for r in _rsample_rows
                  if r[0] is not None}
     else:
-        # ONE sampled collect drives every planner decision (grid level,
-        # dwithin expansion, rect detection, point detection) — the
-        # round-1 build issued a separate driver job per decision, which
-        # dominated small-join latency
+        # ONE sampled collect drives the grid level and the dwithin
+        # expansion, and decides whether a full classification is worth a job
         _rsample_rows = R.select(*rs_cols).limit(1000).collect()
-        rsample_geoms = [r[0] for r in _rsample_rows if r[0] is not None]
+    rsample_geoms = [r[0] for r in _rsample_rows if r[0] is not None]
 
     # --- stats + grid level -------------------------------------------------
     if grid_level is None:
@@ -677,56 +621,35 @@ def spatial_join(
         grid_level = pick_level_for_envelopes(widths, heights)
     grid = Grid(grid_level)
 
-    # --- detect the hot point×polygon shape ----------------------------------
-    # Sample DECIDES, a pure-column full scan CONFIRMS: a heterogeneous
-    # left side (points first, polygons later) under a sample-only
-    # decision routed every row through the single-cell point path and
-    # SILENTLY DROPPED the non-point tail. The confirm is JVM-only
-    # (length + 5-byte LE point header), one narrow scan, no Python.
-    _is_le_point = _is_le_point_expr  # module-level helper (shared with dispatch)
-
+    # --- routes: set tests over the shape kinds of each side -----------------
+    # A fast route must hold for EVERY row: a heterogeneous side (points
+    # first, polygons past a sample) routed by a sample alone would drop
+    # its tail silently. The left side is confirmed in the JVM; the right
+    # side's kinds are complete when broadcast, else the sample decides
+    # whether the one-job full classification runs.
     if left_xy is not None:
         left_is_points = True
-    if left_is_points is None:
-        sample = [r[0] for r in L.select(lgeom).limit(200).collect() if r[0] is not None]
-        left_is_points = bool(sample) and all(
-            len(bytes(v)) == 21 and bytes(v)[1] == wkb.POINT for v in sample
-        )
-        if left_is_points:
-            n_bad = (
-                L.where(F.col(lgeom).isNotNull() & ~_is_le_point(lgeom))
-                .limit(1).count()
-            )
-            left_is_points = n_bad == 0
-
-    # --- right side: axis-aligned-rectangle layer detection -------------------
-    # (admin boxes, tile grids, envelope layers) — unlocks a pure-column
-    # refine for point-in-rect predicates. A 200-row sample DECIDES whether
-    # to try the fast path, but a full exact scan of the (small) right side
-    # CONFIRMS it — a heterogeneous layer (rects first, general polygons
-    # later) must never get bbox-only refinement (ADVICE item 2).
+    elif left_is_points is None:
+        off = _point_offenders(L, lgeom)
+        left_is_points = len(off) <= _OFFENDER_CAP and bool(np.all(off == wkb.KIND_POINT))
+    pip = bool(left_is_points) and predicate in _PIP_PREDS
+    pp = bool(left_is_points) and predicate == "dwithin"
+    fast = _AREAL_KINDS if pip else _POINT_KINDS if pp else set()
+    rkinds = set()
+    if right_is_rects and pip:
+        rkinds = {wkb.KIND_RECT}  # the caller's assertion
+    elif fast:
+        rkinds = set(wkb.shape_kinds([r[0] for r in _rsample_rows]).tolist())
+        if rkinds and rkinds <= fast and not broadcast_right:
+            rkinds = _side_kinds(R, rgeom)
+    # rect (admin boxes, tile grids, envelope layers): pure-column refine;
+    # areal: vectorised PIP (a puntal/lineal row would read as "outside");
+    # NULL disqualifies both, so they take the generic refiner
     if right_is_rects is None:
-        right_is_rects = False
-        if left_is_points and predicate in ("within", "covered_by", "intersects", "touches"):
-            rsample0 = rsample_geoms[:200]
-            if bool(rsample0) and all(_is_axis_rect_wkb(v) for v in rsample0):
-                if _rmap is not None:
-                    # broadcast side is fully collected: the confirm is an
-                    # exact driver-side pass over EVERY row (null geoms
-                    # disqualify, matching the distributed confirm below)
-                    right_is_rects = not _r_has_null_geom and all(
-                        _is_axis_rect_wkb(v) for v in rsample_geoms
-                    )
-                else:
-                    @F.pandas_udf(BooleanType())
-                    def _all_rect(s: pd.Series) -> pd.Series:
-                        return pd.Series([_is_axis_rect_wkb(v) if v is not None else False for v in s], dtype=bool)
-
-                    n_bad = R.where(~_all_rect(F.col(rgeom))).limit(1).count()
-                    right_is_rects = n_bad == 0
-    else:
-        right_is_rects = bool(right_is_rects) and left_is_points and predicate in (
-            "within", "covered_by", "intersects", "touches")
+        right_is_rects = rkinds == {wkb.KIND_RECT}
+    right_is_rects = pip and bool(right_is_rects)
+    right_is_areal = pip and bool(rkinds) and rkinds <= _AREAL_KINDS
+    right_is_points = pp and rkinds <= _POINT_KINDS
     if right_is_rects:
         rb0 = _bounds_udf()(F.col(rgeom))
         R = (
@@ -737,41 +660,6 @@ def spatial_join(
             .withColumn("_ry1", F.col("_rbx.ymax"))
             .drop("_rbx")
         )
-
-    # --- right side: AREAL detection for the PIP fast path --------------------
-    # The point-in-polygon refine treats the right WKB as a polygon; a
-    # puntal/lineal right geometry would read as "outside" and the pair
-    # would be silently dropped (point x point intersects returned 0 rows).
-    # Same discipline as the rect path: the sample DECIDES, a full exact
-    # scan CONFIRMS — a mixed layer must take the generic refiner.
-    right_is_areal = bool(right_is_rects)
-    if not right_is_areal and left_is_points and predicate in (
-        "intersects", "contains", "within", "covers", "covered_by", "touches"
-    ):
-        def _is_areal_wkb(v) -> bool:
-            try:
-                g = wkb.parse(bytes(v))
-            except Exception:
-                return False
-            return g is not None and g.type_id in (wkb.POLYGON, wkb.MULTIPOLYGON)
-
-        rsample0 = rsample_geoms[:200]
-        if bool(rsample0) and all(_is_areal_wkb(v) for v in rsample0):
-            if _rmap is not None:
-                # exact full-coverage confirm over the collected broadcast
-                # side — no extra Spark job
-                right_is_areal = not _r_has_null_geom and all(
-                    _is_areal_wkb(v) for v in rsample_geoms
-                )
-            else:
-                @F.pandas_udf(BooleanType())
-                def _all_areal(s: pd.Series) -> pd.Series:
-                    return pd.Series(
-                        [_is_areal_wkb(v) if v is not None else False for v in s],
-                        dtype=bool,
-                    )
-
-                right_is_areal = R.where(~_all_areal(F.col(rgeom))).limit(1).count() == 0
 
     # --- cover both sides -----------------------------------------------------
     # point left sides NEVER explode — for dwithin the distance expansion
@@ -789,7 +677,7 @@ def spatial_join(
                 px.isNotNull() & py.isNotNull()
             )
         else:
-            Lc = (L.withColumn("_lxy", _point_xy(F.col(lgeom), grid=grid))
+            Lc = (L.withColumn("_lxy", _point_xy(F.col(lgeom), ("left", "spatial_join"), grid))
                   .withColumn("_cell", F.col("_lxy.cell"))
                   .where(F.col("_cell").isNotNull()))
             px, py = F.col("_lxy.x"), F.col("_lxy.y")
@@ -813,8 +701,6 @@ def spatial_join(
     )
     right_exploded = True
 
-    # (broadcast decision moved above the planner sample — see the
-    # round-4 comment there)
     if salt_replicas > 1 and not broadcast_right:
         # Zipf-skewed cells (hotspot cities) overwhelm single reduce tasks
         # in a shuffled cell join; salting splits each hot cell across
@@ -856,86 +742,44 @@ def spatial_join(
         ).drop("_lb", "_rb")
 
     # --- refine -----------------------------------------------------------------
-    if left_is_points and right_is_areal and predicate in ("intersects", "contains", "within", "covers", "covered_by", "touches"):
-        # vectorized PIP path; note arg order: polygon side is `right`
-        # for contains/covers we test polygon-contains-point i.e. predicate
-        # names are interpreted as left PRED right:
-        #   left(point) within right(poly)      -> interior
-        #   left(point) intersects right(poly)  -> not outside
-        pred_map = {
-            "within": "within",        # point within poly -> interior
-            "covered_by": "covers",    # point covered_by poly -> not outside
-            "intersects": "intersects",
-            "touches": "touches",
-            # left point contains/covers a polygon is impossible unless the
-            # polygon is degenerate — route to the generic refiner
-        }
-        if predicate in ("contains", "covers"):
-            refine = _refine_udf(predicate, False)
-            cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom)))
+    if right_is_rects:
+        # pure-column point-in-rectangle refine (whole-stage codegen)
+        x0, y0, x1, y1 = (F.col(c) for c in ("_rx0", "_ry0", "_rx1", "_ry1"))
+        inside_open = (px > x0) & (px < x1) & (py > y0) & (py < y1)
+        inside_closed = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+        if predicate == "within":
+            ok = inside_open
+        elif predicate in ("covered_by", "intersects"):
+            ok = inside_closed
+        else:  # touches: closed-box minus interior
+            ok = inside_closed & ~inside_open
+        cand = cand.withColumn("_ok", ok)
+    elif right_is_areal:
+        # vectorized PIP, polygon side `right`: point within -> interior,
+        # covered_by/intersects -> not outside, touches -> boundary
+        pip_pred = "covers" if predicate == "covered_by" else predicate
+        if broadcast_right:
+            # broadcast the polygon bytes once; candidates carry only
+            # ids. The id->WKB map was already collected by the planner
+            # (byte-capped, content-derived ids) — no second collect.
+            bc = left.sparkSession.sparkContext.broadcast(_rmap)
+            pipb = _point_in_polygon_refine_bcast_udf(pip_pred, bc)
+            cand = cand.withColumn("_ok", pipb(px, py, F.col("_rid")))
         else:
-            if right_is_rects:
-                # pure-column point-in-rectangle refine (whole-stage codegen)
-                x0, y0, x1, y1 = (F.col(c) for c in ("_rx0", "_ry0", "_rx1", "_ry1"))
-                inside_open = (px > x0) & (px < x1) & (py > y0) & (py < y1)
-                inside_closed = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-                if predicate == "within":
-                    ok = inside_open
-                elif predicate in ("covered_by", "intersects"):
-                    ok = inside_closed
-                else:  # touches: closed-box minus interior
-                    ok = inside_closed & ~inside_open
-                cand = cand.withColumn("_ok", ok)
-            elif broadcast_right:
-                # broadcast the polygon bytes once; candidates carry only
-                # ids. The id->WKB map was already collected by the planner
-                # (byte-capped, content-derived ids) — no second collect.
-                bc = left.sparkSession.sparkContext.broadcast(_rmap)
-                pipb = _point_in_polygon_refine_bcast_udf(pred_map[predicate], bc)
-                cand = cand.withColumn("_ok", pipb(px, py, F.col("_rid")))
-            else:
-                pip = _point_in_polygon_refine_udf(pred_map[predicate])
-                cand = cand.withColumn("_ok", pip(px, py, F.col(rgeom)))
+            pipr = _point_in_polygon_refine_udf(pip_pred)
+            cand = cand.withColumn("_ok", pipr(px, py, F.col(rgeom)))
+    elif right_is_points:
+        # column refine on the decoded x/y, so it becomes the join
+        # condition. sqrt(dx*dx + dy*dy), NOT hypot: hypot rounds up to
+        # 1 ulp differently from a SQL oracle (ADVICE item 4). Spark
+        # orders NaN above every double (`x <= NaN` is true): guard it.
+        d = F.col(dist_col)
+        dx, dy = px - F.col("_rx"), py - F.col("_ry")
+        cand = cand.withColumn(
+            "_ok", (F.sqrt(dx * dx + dy * dy) <= d) & ~F.isnan(d))
     elif predicate == "dwithin":
-        rsample = rsample_geoms[:200]
-        right_is_points = bool(rsample) and all(
-            len(bytes(v)) == 21 and bytes(v)[1] == wkb.POINT for v in rsample
-        )
-        if right_is_points:
-            # full confirm, same reason as left_is_points: a non-point tail
-            # under the point×point refine decodes invalid and drops pairs
-            if _rmap is not None:
-                # exact driver-side confirm over the collected broadcast
-                # side (parses big-endian/EWKB points too, so it is at
-                # least as permissive as the JVM header test)
-                def _pt_ok(v) -> bool:
-                    b = bytes(v)
-                    if len(b) == 21 and b[0] == 1 and b[1] == wkb.POINT:
-                        return True
-                    try:
-                        g = wkb.parse(b)
-                    except Exception:
-                        return False
-                    return g is not None and g.type_id == wkb.POINT
-
-                right_is_points = all(_pt_ok(v) for v in rsample_geoms)
-            else:
-                right_is_points = (
-                    R.where(F.col(rgeom).isNotNull() & ~_is_le_point(rgeom))
-                    .limit(1).count() == 0
-                )
-        if left_is_points and right_is_points:
-            # column refine on the decoded x/y, so it becomes the join
-            # condition. sqrt(dx*dx + dy*dy), NOT hypot: hypot rounds up to
-            # 1 ulp differently from a SQL oracle (ADVICE item 4). Spark
-            # orders NaN above every double (`x <= NaN` is true): guard it.
-            d = F.col(dist_col)
-            dx, dy = px - F.col("_rx"), py - F.col("_ry")
-            cand = cand.withColumn(
-                "_ok", (F.sqrt(dx * dx + dy * dy) <= d) & ~F.isnan(d))
-        else:
-            refine = _refine_udf("dwithin", True)
-            cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom), F.col(dist_col)))
+        refine = _refine_udf("dwithin", True)
+        cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom), F.col(dist_col)))
     else:
         refine = _refine_udf(predicate, False)
         cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom)))
@@ -1062,11 +906,7 @@ def geography_dwithin_join(
     if strategy == "auto":
         if broadcast_right is None:
             try:
-                stats = R.agg(
-                    F.count("*").alias("n"), F.avg(F.length(F.col(rg))).alias("w")
-                ).collect()[0]
-                n_r = int(stats["n"] or 0)
-                est = n_r * (float(stats["w"] or 0.0) + 64.0)
+                n_r, est = _estimate_bytes(R, rg)
                 # broadcast here is a NESTED LOOP: every probe row meets
                 # every build row in the Python refine, so cap the PAIR
                 # count, not just the build bytes — a 1 MB build side
@@ -1312,7 +1152,7 @@ def geography_pip_join(
     # would OOM the driver). Above the cap the band join shuffles on _band,
     # which is scale-safe on both sides like the dwithin variant.
     try:
-        bcast = _estimate_bytes(R, rg) <= BROADCAST_BYTES_CAP
+        bcast = _estimate_bytes(R, rg)[1] <= BROADCAST_BYTES_CAP
     except Exception:
         bcast = False
     Rj = F.broadcast(Rb) if bcast else Rb

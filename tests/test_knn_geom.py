@@ -106,3 +106,31 @@ def test_non_point_probe_raises(spark):
     B, _ = _rect_build(spark, m=5)
     with pytest.raises((Exception,), match="probe side must be point"):
         knn_join(B, B, k=1, build_id="bid")
+
+
+@pytest.mark.parametrize("bt", [200_000, 0])  # broadcast past the cap / grid path
+def test_build_past_cap_mixing_bigendian_points_and_rects(spark, bt):
+    """A build side past the 20k collect cap is classified by one Spark job
+    over every row: big-endian points are points there too, so points +
+    rects take the rect kernel, and every rank equals a brute force."""
+    import struct
+
+    rng = np.random.default_rng(11)
+    m = 20_050
+    bx, by = rng.uniform(0, 100, m), rng.uniform(0, 100, m)
+    rows = [(j, b"\x00" + struct.pack(">I", 1) + struct.pack(">dd", bx[j], by[j]))
+            for j in range(m)]
+    rects = np.array([[10.0, 10.0, 10.4, 10.3], [60.0, 20.0, 60.5, 20.2], [33.0, 70.0, 33.3, 70.6]])
+    rows += [(m + j, wkb.encode(wkb.box(*r))) for j, r in enumerate(rects)]
+    B = spark.createDataFrame(rows, "bid LONG, geometry BINARY")
+    P, px, py = _probe_df(spark, n=12, seed=12)
+    out = knn_join(P, B, k=4, build_id="bid", grid_level=7, broadcast_threshold=bt)
+    got = sorted((r["pid"], r["knn_rank"], r["bid"], r["knn_distance"]) for r in out.collect())
+    boxes = np.vstack([np.column_stack([bx, by, bx, by]), rects])
+    want = []
+    for i in range(len(px)):
+        d = _rect_dist(px[i], py[i], boxes)
+        order = np.lexsort((np.arange(len(d)), d * d))[:4]
+        want += [(i, rank + 1, int(j), float(d[j])) for rank, j in enumerate(order)]
+    assert [g[:3] for g in got] == [w[:3] for w in sorted(want)]
+    np.testing.assert_allclose([g[3] for g in got], [w[3] for w in sorted(want)], atol=1e-9)

@@ -348,3 +348,75 @@ def test_planar_eucl_prune_exact_at_large_offset(spark):
                   .where("knn_rank = 1").select(*cols).collect())
     assert len(pruned) == 2
     assert pruned == full
+
+
+def _prune_case(kind):
+    """(build x, y, probe x, y) with exact grid ties, duplicate build
+    points, a co-circular ring and random fill; ``kind`` is a planar
+    coordinate offset or "spheroid" (lon/lat clusters at mid latitude,
+    across the antimeridian and next to the pole)."""
+    rng = np.random.default_rng(31)
+    gi, gj = np.meshgrid(np.arange(15.0), np.arange(15.0))
+    theta = 2 * np.pi * np.arange(120) / 120
+    if kind == "spheroid":
+        parts, probes = [], []
+        for lon0, lat0 in ((10.0, 45.0), (179.95, -30.0), (-60.0, 89.8)):
+            s = 0.01
+            # great-circle ring of radius 1 km: haversine ties up to rounding
+            c0, c1, dr = np.radians(lon0 + 7 * s), np.radians(lat0 + 7 * s), 1000.0 / algos.EARTH_RADIUS_M
+            rlat = np.arcsin(np.sin(c1) * np.cos(dr) + np.cos(c1) * np.sin(dr) * np.cos(theta))
+            rlon = c0 + np.arctan2(np.sin(theta) * np.sin(dr) * np.cos(c1),
+                                   np.cos(dr) - np.sin(c1) * np.sin(rlat))
+            bx = np.concatenate([lon0 + s * gi.ravel(), np.degrees(rlon),
+                                 lon0 + s * rng.uniform(0, 14, 20)])
+            by = np.concatenate([lat0 + s * gj.ravel(), np.degrees(rlat),
+                                 lat0 + s * rng.uniform(0, 14, 20)])
+            parts.append((bx, by))
+            probes += [(lon0 + 7 * s, lat0 + 7 * s), (lon0 + 3.5 * s, lat0 + 4.5 * s),
+                       (lon0 + 5 * s, lat0 + 5 * s), (lon0 + 14.2 * s, lat0 - 0.3 * s)]
+        bx = np.concatenate([p[0] for p in parts])
+        by = np.concatenate([p[1] for p in parts])
+        bx = np.where(bx > 180.0, bx - 360.0, bx)
+        px, py = np.array(probes).T
+        px = np.where(px > 180.0, px - 360.0, px)
+    else:
+        off = kind
+        bx = np.concatenate([off + gi.ravel(), off + 7 + 3 * np.cos(theta),
+                             off + rng.uniform(0, 14, 40), [off + 5.0] * 3])
+        by = np.concatenate([off + gj.ravel(), off + 7 + 3 * np.sin(theta),
+                             off + rng.uniform(0, 14, 40), [off + 5.0] * 3])
+        px = off + np.array([7.0, 3.5, 5.0, 14.2, 0.0, 9.25])
+        py = off + np.array([7.0, 4.5, 5.0, -0.3, 0.0, 2.75])
+    return bx, by, px, py
+
+
+@pytest.mark.parametrize("kind", [0.0, 1e4, 1e9, "spheroid"])
+def test_point_knn_prune_equals_bruteforce_topk(spark, kind):
+    """The GEMM prune paths (planar and chord) return a brute-force numpy
+    top-k row for row — same neighbours, ranks, tie order (build id) and
+    bit-equal distances — on ties at the cut, near-ties whose keys differ
+    in the last ulps, and offsets up to 1e9 (n_build > 4 * kk_prune, so
+    every k here takes the prune)."""
+    bx, by, px, py = _prune_case(kind)
+    spheroid = kind == "spheroid"
+    assert len(bx) > 4 * 32
+    P = spark.createDataFrame(
+        [(int(i), bytes(b)) for i, b in enumerate(wkb.encode_points_xy(px, py))],
+        SCHEMA).withColumnRenamed("id", "pid")
+    B = spark.createDataFrame(
+        [(int(i), bytes(b)) for i, b in enumerate(wkb.encode_points_xy(bx, by))],
+        SCHEMA).withColumnRenamed("id", "bid")
+    if spheroid:
+        d = algos.haversine_m(px[:, None], py[:, None], bx[None, :], by[None, :])
+    else:
+        dx, dy = px[:, None] - bx[None, :], py[:, None] - by[None, :]
+        d = dx * dx + dy * dy
+    for k in (1, 5, 16):
+        want = []
+        for i in range(len(px)):
+            order = np.lexsort((np.arange(len(bx)), d[i]))[:k]
+            want += [(i, int(j), float(d[i, j] if spheroid else np.sqrt(d[i, j])), r + 1)
+                     for r, j in enumerate(order)]
+        got = knn_join(P, B, k=k, build_id="bid", use_spheroid=spheroid).select(
+            "pid", "bid", "knn_distance", "knn_rank").collect()
+        assert sorted(tuple(r) for r in got) == sorted(want), k

@@ -170,3 +170,79 @@ def test_knn_nonpoint_probe_past_sample_raises(spark, bt):
     with pytest.raises(Exception, match="probe side must be point geometries"):
         knn_join(probe, build, k=2, probe_geom="geom", build_geom="geom",
                  broadcast_threshold=bt, grid_level=5).collect()
+
+
+def _be_empty():
+    return _be(float("nan"), float("nan"))
+
+
+def _ewkb_empty():
+    return _ewkb(float("nan"), float("nan"))
+
+
+@pytest.mark.parametrize("bt", [200_000, 0])  # broadcast solve, grid strict decode
+def test_knn_probe_point_empty_any_encoding_matches_le_twin(spark, bt):
+    """A POINT EMPTY probe row is a point in every encoding: big-endian and
+    EWKB EMPTY probes match nothing, exactly like the little-endian one,
+    instead of failing the strict probe decode."""
+    rng = np.random.default_rng(7)
+    x, y = rng.uniform(0, 50, 40), rng.uniform(0, 50, 40)
+    pts = [bytes(w) for w in wkb.encode_points_xy(x, y)]
+    build = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(y, x))],
+        "bid LONG, geom BINARY")
+    kw = dict(k=3, probe_geom="geom", build_geom="geom", build_id="bid",
+              broadcast_threshold=bt, grid_level=5)
+    twin = spark.createDataFrame(list(enumerate(pts + [EMPTY, EMPTY])), "pid LONG, geom BINARY")
+    odd = spark.createDataFrame(list(enumerate(pts + [_be_empty(), _ewkb_empty()])),
+                                "pid LONG, geom BINARY")
+    want = _rows(knn_join(twin, build, **kw), "pid", "bid", "knn_rank")
+    assert len(want) == 40 * 3
+    assert _rows(knn_join(odd, build, **kw), "pid", "bid", "knn_rank") == want
+
+
+@pytest.mark.parametrize("bcast", [True, False])
+def test_spatial_join_point_empty_any_encoding_matches_le_twin(spark, triangles, bcast):
+    """The strict planar point decode of the left side passes BE/EWKB
+    POINT EMPTY rows like the LE one (they match nothing; a left join
+    keeps them unmatched)."""
+    base = [bytes(w) for w in wkb.encode_points_xy(np.array([12.0, 31.0]), np.array([5.0, 9.0]))]
+    kw = dict(predicate="within", left_geom="geom", right_geom="geom", how="left",
+              broadcast_right=bcast, grid_level=6)
+    twin = spark.createDataFrame(list(enumerate(base + [EMPTY, EMPTY])), "pid LONG, geom BINARY")
+    odd = spark.createDataFrame(list(enumerate(base + [_be_empty(), _ewkb_empty()])),
+                                "pid LONG, geom BINARY")
+    want = _rows(spatial_join(twin, triangles, **kw), "pid", "tid")
+    assert want == [(0, 1), (1, 3), (2, None), (3, None)]
+    assert _rows(spatial_join(odd, triangles, **kw), "pid", "tid") == want
+    assert _rows(spatial_join(odd, triangles, left_is_points=True, **kw), "pid", "tid") == want
+
+
+def test_geography_dwithin_point_empty_any_encoding_matches_le_twin(spark):
+    from sedona_db_spark.operators.spatial_join import geography_dwithin_join
+
+    base = [bytes(w) for w in wkb.encode_points_xy(np.array([10.0, 10.001]),
+                                                   np.array([45.0, 45.0]))]
+    right = spark.createDataFrame([(7, base[1])], "rid LONG, geom BINARY")
+    kw = dict(distance_m=500.0, left_geom="geom", right_geom="geom")
+    twin = spark.createDataFrame(list(enumerate(base[:1] + [EMPTY, EMPTY])), "pid LONG, geom BINARY")
+    odd = spark.createDataFrame(list(enumerate(base[:1] + [_be_empty(), _ewkb_empty()])),
+                                "pid LONG, geom BINARY")
+    for strategy in ("broadcast", "banded"):
+        want = _rows(geography_dwithin_join(twin, right, strategy=strategy, **kw), "pid", "rid")
+        assert want == [(0, 7)]
+        got = _rows(geography_dwithin_join(odd, right, strategy=strategy, **kw), "pid", "rid")
+        assert got == want
+
+
+def test_knn_build_point_empty_matches_nothing(spark):
+    """A POINT EMPTY build row is never a neighbour, so with k above the
+    non-empty build count the broadcast solve returns the non-empty rows
+    (a NaN key at the k-th position used to empty the probe's result)."""
+    probe = spark.createDataFrame([(0, wkb.encode(wkb.point(0.0, 0.0)))], "pid LONG, geom BINARY")
+    build = spark.createDataFrame(
+        [(0, wkb.encode(wkb.point(1.0, 0.0))), (1, EMPTY), (2, wkb.encode(wkb.point(0.0, 2.0)))],
+        "bid LONG, geom BINARY")
+    got = _rows(knn_join(probe, build, k=3, probe_geom="geom", build_geom="geom",
+                         build_id="bid"), "pid", "bid", "knn_rank")
+    assert got == [(0, 0, 1), (0, 2, 2)]

@@ -421,6 +421,40 @@ def test_heterogeneous_sides_beyond_sample_window(spark):
         distance=0.6).collect())
     assert got2 == [777]
 
+    # big-endian points on the left (they fail the JVM LE-point test) and
+    # EWKB points on a DWithin right side: the point routes admit them and
+    # every result equals the generic route's
+    import struct
+
+    def be(x, y):
+        return b"\x00" + struct.pack(">I", 1) + struct.pack(">dd", x, y)
+
+    def ewkb(x, y):
+        return b"\x01" + struct.pack("<II", 0x20000001, 4326) + struct.pack("<dd", x, y)
+
+    L3 = spark.createDataFrame(
+        far + [(1000 + i, be(0.5 * i, 1.5)) for i in range(8)],
+        "id LONG, geom BINARY",
+    )
+    R4 = spark.createDataFrame(
+        [(i, bytes(W.encode_points_xy(np.array([100.0]), np.array([100.0]))[0]))
+         for i in range(250)]
+        + [(800 + i, ewkb(1.5 + 0.25 * i, 0.5)) for i in range(4)],
+        "rid LONG, rgeom BINARY",
+    )
+    for bcast in (True, False):
+        kw = dict(left_geom="geom", right_geom="bgeom", broadcast_right=bcast)
+        got3 = sorted(r["id"] for r in spatial_join(L3, box, "within", **kw).collect())
+        assert got3 == sorted(r["id"] for r in spatial_join(
+            L3, box, "within", left_is_points=False, **kw).collect())
+        assert got3 == [1001, 1002, 1003, 1004, 1005]
+        kw = dict(left_geom="geom", right_geom="rgeom", distance=0.6,
+                  broadcast_right=bcast)
+        got4 = sorted(r["rid"] for r in spatial_join(probe, R4, "dwithin", **kw).collect())
+        assert got4 == sorted(r["rid"] for r in spatial_join(
+            probe, R4, "dwithin", left_is_points=False, **kw).collect())
+        assert got4 == [800, 801, 802]
+
 
 def test_probe_order_preserved(spark):
     """Round-4 (VERDICT r3 #6, exec.rs:204-225 analogue): output rows of

@@ -104,3 +104,75 @@ def test_wkt_multi_with_empty_elements():
     assert wkb.to_wkt(g) == "MULTILINESTRING ((1 1, 2 2), EMPTY, (3 3, 4 4))"
     g2 = wkb.from_wkt("MULTIPOLYGON (((1 1, 2 2, 2 1, 1 1)), EMPTY)")
     assert len(g2.coords) == 2 and g2.coords[1].is_empty
+
+
+def _kind_by_parse(b):
+    """Reference shape kind from a full parse (the join route classes)."""
+    if b is None:
+        return wkb.KIND_NULL
+    try:
+        g = wkb.parse(b)
+    except Exception:
+        return wkb.KIND_OTHER
+    if g.type_id == wkb.POINT:
+        return wkb.KIND_POINT
+    if g.type_id == wkb.POLYGON and len(g.coords) == 1 and len(g.coords[0]) == 5:
+        ring = g.coords[0]
+        xs, ys = set(ring[:4, 0].tolist()), set(ring[:4, 1].tolist())
+        edges_ok = all(ring[i + 1, 0] == ring[i, 0] or ring[i + 1, 1] == ring[i, 1]
+                       for i in range(4))
+        if (ring[0, :2] == ring[4, :2]).all() and len(xs) == len(ys) == 2 and edges_ok:
+            return wkb.KIND_RECT
+    if g.type_id in (wkb.POLYGON, wkb.MULTIPOLYGON):
+        return wkb.KIND_AREAL
+    return wkb.KIND_OTHER
+
+
+def test_shape_kinds_matches_parse_reference():
+    nan = float("nan")
+
+    def be(*xy):
+        return b"\x00" + struct.pack(">I", 1) + struct.pack(">%dd" % len(xy), *xy)
+
+    def ewkb(flags, *xy, srid=None):
+        head = struct.pack("<I", 1 | flags) + (struct.pack("<I", srid) if srid else b"")
+        return b"\x01" + head + struct.pack("<%dd" % len(xy), *xy)
+
+    box = wkb.encode(wkb.box(0, 0, 2, 1))
+    bufs = [
+        None,
+        wkb.encode(wkb.point(1, 2)),                      # LE XY
+        be(3.0, 4.0),                                     # big-endian
+        ewkb(0x20000000, 1.0, 2.0, srid=4326),            # EWKB SRID
+        ewkb(0x80000000, 1.0, 2.0, 3.0),                  # EWKB Z
+        ewkb(0x40000000 | 0x20000000, 1.0, 2.0, 5.0, srid=3857),  # EWKB M + SRID
+        wkb.encode(wkb.from_wkt("POINT ZM (1 2 3 4)")),   # ISO ZM
+        wkb.encode(wkb.from_wkt("POINT EMPTY")),          # EMPTY, LE
+        be(nan, nan),                                     # EMPTY, BE
+        ewkb(0x20000000, nan, nan, srid=4326),            # EMPTY, EWKB
+        box,
+        bytearray(box),                                   # Spark hands bytearray
+        wkb.encode(wkb.box(5, 5, 5, 6)),                  # zero-width: not a rect
+        wkb.encode(wkb.from_wkt("POLYGON ((0 0, 2 0, 2 1, 1 2, 0 0))")),
+        wkb.encode(wkb.from_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))")),
+        wkb.encode(wkb.from_wkt("POLYGON EMPTY")),
+        wkb.encode(wkb.from_wkt(
+            "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((5 5, 6 5, 6 6, 5 6, 5 5)))")),
+        wkb.encode(wkb.from_wkt("LINESTRING (0 0, 1 1)")),
+        wkb.encode(wkb.from_wkt("MULTIPOINT ((1 1), (2 2))")),
+        wkb.encode(wkb.from_wkt("GEOMETRYCOLLECTION (POINT (1 1))")),
+        box[:60],                                         # truncated polygon body
+        wkb.encode(wkb.point(1, 2))[:15],                 # truncated point
+        b"\x01\x03",                                      # truncated header
+        b"\x01" + struct.pack("<I", 99) + b"\x00" * 16,   # unknown type
+        b"garbage, not wkb at all",
+        b"",
+    ]
+    got = wkb.shape_kinds(bufs)
+    assert got.dtype == np.int8
+    want = [_kind_by_parse(b) for b in bufs]
+    assert got.tolist() == want
+    # the reference really covers every class, EMPTY points included
+    assert want[:10] == [wkb.KIND_NULL] + [wkb.KIND_POINT] * 9
+    assert want[10:14] == [wkb.KIND_RECT, wkb.KIND_RECT, wkb.KIND_AREAL, wkb.KIND_AREAL]
+    assert set(want[17:]) == {wkb.KIND_OTHER}
