@@ -533,9 +533,12 @@ def knn_join(
 
     # --- broadcast per-cell histogram -----------------------------------------
     hist_rows = B_cells.groupBy("_cell").count().collect()
-    k_eff = min(k, n_build)
     cells = np.array([r["_cell"] for r in hist_rows], dtype=np.int64)
     counts = np.array([r["count"] for r in hist_rows], dtype=np.int64)
+    # k counts only build rows that survive the not-null filter above: a
+    # NULL or POINT EMPTY row can never be found, and a probe waiting for
+    # it would escalate through every pass. A point is one histogram entry.
+    k_eff = min(k, int(counts.sum()) if mode == "point" else B.count())
     hix, hiy = grid.unpack(cells)
     nx = grid.nx
     # dense 2D prefix-sum for O(1) ring-count queries; level 8 -> 256x256 ints
@@ -664,7 +667,7 @@ def knn_join(
     # least r full cells from anywhere in the probe's cell. Probes whose
     # k-th distance exceeds that bound re-run with doubled radius.
     result = result.cache()
-    for _ in range(max_radius_passes):
+    for _ in range(max_radius_passes if k_eff else 0):
         guarantee = F.col("_r").cast("double") * F.lit(min(grid.cw, grid.ch))
         if use_spheroid:
             guarantee = guarantee * F.lit(111194.9266) * F.least(

@@ -138,6 +138,19 @@ def test_one_python_pass_per_point_side(spark):
     pip = spatial_join(pts, tris, predicate="within", left_geom="geom", right_geom="geom")
     _assert_each_udf_once(pip)
 
+    # broadcast PIP: the probe pass is the plan's only Python, no cell explode
+    plan = pip._jdf.queryExecution().executedPlan().toString()
+    assert _python_calls(plan) == ["probe"] and "explode" not in plan, plan
+    # and planning it launches at most the byte estimate and one collect
+    sc, group = spark.sparkContext, "spatial-join-planning-jobs"
+    sc.setJobGroup(group, "spatial_join planning")
+    try:
+        spatial_join(pts, tris, predicate="within", left_geom="geom", right_geom="geom")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, jobs
+
     # point x point DWithin: one Python pass per side, refine in the JVM
     dw = spatial_join(pts, build, predicate="dwithin", distance=2.0,
                       left_geom="geom", right_geom="geom")
@@ -169,3 +182,30 @@ def test_rect_touches_semantics(spark):
                           right_geom="geometry", left_xy=("lon", "lat"), grid_level=4)
     t = {r["bid"] for r in touches.collect()}
     assert len(t) >= 1 and within.count() == 0
+
+
+def test_route_record_of_perfbench_shaped_join(spark, caplog):
+    """Each spatial_join logs one INFO record on ``sedona_db_spark.plan``:
+    route, byte estimate, build rows, right-side kinds and grid level."""
+    rng = np.random.default_rng(12)
+    x, y = rng.uniform(0, 100, 300), rng.uniform(0, 100, 300)
+    pts = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(x, y))],
+        "pid LONG, geom BINARY")
+    polys = []
+    for k in range(25):  # irregular 60-vertex stars, as in the benchmark
+        cx, cy = 20.0 * (k % 5) + 10.0, 20.0 * (k // 5) + 10.0
+        t = np.linspace(0.0, 2 * np.pi, 60, endpoint=False)
+        r = rng.uniform(4.0, 9.6, 60)
+        ring = np.stack([cx + r * np.cos(t), cy + r * np.sin(t)], axis=1)
+        polys.append((k, wkb.encode(wkb.Geometry(wkb.POLYGON, [np.vstack([ring, ring[:1]])]))))
+    right = spark.createDataFrame(polys, "rid INT, geom BINARY")
+    with caplog.at_level("INFO", logger="sedona_db_spark.plan"):
+        spatial_join(pts, right, predicate="within", left_geom="geom", right_geom="geom")
+        spatial_join(pts, pts, predicate="dwithin", distance=1.0, left_geom="geom",
+                     right_geom="geom", grid_level=7)
+    probe, cell = [r.plan for r in caplog.records if r.name == "sedona_db_spark.plan"]
+    assert probe == {"route": "broadcast_probe", "est_bytes": 25 * (len(polys[0][1]) + 64.0),
+                     "build_rows": 25, "right_kinds": ["areal"], "grid_level": 4}
+    assert cell["route"] == "cell_join" and cell["grid_level"] == 7
+    assert cell["right_kinds"] == ["point"] and cell["build_rows"] == 300

@@ -93,6 +93,25 @@ def test_knn_k_exceeds_build_size(spark):
     assert res.count() == 10 * 4
 
 
+def test_knn_grid_k_counts_only_findable_build_rows(spark):
+    """Grid path: POINT EMPTY build rows are never candidates, so
+    k beyond the non-empty build rows must settle on those rows (counting
+    the EMPTY rows in k made every probe escalate through every pass)."""
+    probe_rows, _, _ = make_points(6, 11)
+    empty = wkb.encode(wkb.from_wkt("POINT EMPTY"))
+    be_empty = b"\x00\x00\x00\x00\x01" + b"\x7f\xf8" + b"\x00" * 6 + b"\x7f\xf8" + b"\x00" * 6
+    build_rows = [(0, wkb.encode(wkb.point(20.0, 30.0))), (1, empty),
+                  (2, wkb.encode(wkb.point(70.0, 60.0))), (3, be_empty)]
+    P = spark.createDataFrame(probe_rows, SCHEMA).withColumnRenamed("id", "pid")
+    B = spark.createDataFrame(build_rows, SCHEMA).withColumnRenamed("id", "bid")
+    kw = dict(k=4, build_id="bid", grid_level=2)
+    cols = ("pid", "bid", "knn_rank", "knn_distance")
+    want = sorted(tuple(r) for r in knn_join(P, B, **kw).select(*cols).collect())
+    assert len(want) == 6 * 2
+    got = sorted(tuple(r) for r in knn_join(P, B, broadcast_threshold=0, **kw).select(*cols).collect())
+    assert got == want
+
+
 def test_knn_include_ties(spark):
     # 4 equidistant neighbors, k=2 with ties -> all 4 returned
     probe_rows = [(0, bytes(wkb.encode_points_xy(np.array([50.0]), np.array([50.0]))[0]))]

@@ -6,7 +6,9 @@ Each fast path must return the same rows as its generic twin — the
 per-pair WKB refiner, or a brute-force kNN — on the inputs a decode can
 get wrong: NULL geometries, POINT EMPTY (NaN coordinates), big-endian and
 EWKB points, NaN and boundary-exact DWithin distances, and a non-point
-probe row past the planner's sample."""
+probe row past the planner's sample. The broadcast probe of relation
+joins is checked against a pairwise brute force under every predicate and
+join type."""
 
 import struct
 
@@ -15,7 +17,7 @@ import pytest
 
 from sedona_db_spark.geometry import wkb
 from sedona_db_spark.operators.knn_join import knn_join
-from sedona_db_spark.operators.spatial_join import spatial_join
+from sedona_db_spark.operators.spatial_join import RELATION_FNS, spatial_join
 
 EMPTY = wkb.encode(wkb.from_wkt("POINT EMPTY"))
 
@@ -246,3 +248,111 @@ def test_knn_build_point_empty_matches_nothing(spark):
     got = _rows(knn_join(probe, build, k=3, probe_geom="geom", build_geom="geom",
                          build_id="bid"), "pid", "bid", "knn_rank")
     assert got == [(0, 0, 1), (0, 2, 2)]
+
+
+# --- the broadcast probe: every relation join with a broadcast right side ---
+
+_HOWS = ("inner", "left", "right", "full", "left_semi", "left_anti")
+_PREDS = sorted(RELATION_FNS)
+
+
+def _probe_left_rows():
+    """LE points, then NULL, POINT EMPTY in three encodings, BE and EWKB
+    points, points on polygon edges and vertices and on grid-cell corners
+    of levels 2-6 (the probe picks level 2 here), a LINESTRING and a large
+    POLYGON at the tail."""
+    rng = np.random.default_rng(9)
+    x, y = rng.uniform(-5, 55, 60), rng.uniform(-5, 55, 60)
+    geoms = [bytes(w) for w in wkb.encode_points_xy(x, y)]
+    geoms += [None, EMPTY, _be_empty(), _ewkb_empty(), _be(12.0, 5.0), _ewkb(33.0, 7.5)]
+    special = [(5.0, 0.0), (2.5, 25.0), (40.0, 15.0), (25.0, 25.0),  # edges
+               (10.0, 0.0), (15.0, 50.0), (50.0, 20.0), (20.0, 20.0),  # vertices
+               (0.0, 0.0), (0.0, 45.0), (45.0, 22.5), (22.5, 11.25), (11.25, 5.625),
+               (5.625, 2.8125)]  # cell corners
+    geoms += [bytes(w) for w in wkb.encode_points_xy(*np.array(special).T)]
+    geoms += [wkb.encode(wkb.from_wkt(t)) for t in (
+        "LINESTRING (1 1, 30 30)", "POLYGON ((-1 -1, 60 -1, 60 60, -1 60, -1 -1))")]
+    return list(enumerate(geoms))
+
+
+def _probe_right_rows():
+    """Non-rect triangles, rects, a point, a line, a NULL geometry and two
+    identical rows."""
+    rows = []
+    for i in range(4):
+        ring = np.array([[10.0 * i, 0.0], [10.0 * i + 10, 0.0], [10.0 * i + 5, 50.0],
+                         [10.0 * i, 0.0]])
+        rows.append((i, wkb.encode(wkb.Geometry(wkb.POLYGON, [ring]))))
+    rows += [(4, wkb.encode(wkb.box(40.0, 10.0, 50.0, 20.0))),
+             (5, wkb.encode(wkb.box(0.0, 30.0, 8.0, 38.0))),
+             (6, wkb.encode(wkb.point(12.0, 5.0))),
+             (7, wkb.encode(wkb.from_wkt("LINESTRING (0 0, 50 50)"))),
+             (8, None)]
+    rows += [(9, wkb.encode(wkb.box(20.0, 20.0, 30.0, 25.0)))] * 2
+    return rows
+
+
+def _bruteforce(lrows, rrows, how):
+    """Every (predicate, pid, tid) row the join must return, from a
+    pairwise brute force over ``RELATION_FNS`` (NULL and empty rows match
+    nothing)."""
+    def live(b):
+        return None if b is None or wkb.parse(b).is_empty else wkb.parse(b)
+
+    L = [(p, live(b)) for p, b in lrows]
+    R = [(t, live(b)) for t, b in rrows]
+    out = []
+    for pred in _PREDS:
+        pairs = [(li, ri) for li, (_, a) in enumerate(L) for ri, (_, b) in enumerate(R)
+                 if a is not None and b is not None and RELATION_FNS[pred](a, b)]
+        hit_l, hit_r = {li for li, _ in pairs}, {ri for _, ri in pairs}
+        inner = [(L[li][0], R[ri][0]) for li, ri in pairs]
+        l_miss = [(p, None) for li, (p, _) in enumerate(L) if li not in hit_l]
+        r_miss = [(None, t) for ri, (t, _) in enumerate(R) if ri not in hit_r]
+        rows = {"inner": inner, "left": inner + l_miss, "right": inner + r_miss,
+                "full": inner + l_miss + r_miss, "left_anti": l_miss,
+                "left_semi": [(p, None) for li, (p, _) in enumerate(L) if li in hit_l]}[how]
+        out += [(pred, p, t) for p, t in rows]
+    return sorted(out, key=lambda r: tuple((v is None, v) for v in r))
+
+
+def _every_predicate(left, right, how, bcast):
+    """(predicate, pid, tid) rows of the join under every relation
+    predicate, in one action."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    parts = []
+    for pred in _PREDS:
+        j = spatial_join(left, right, predicate=pred, left_geom="geom", right_geom="geom",
+                         how=how, broadcast_right=bcast)
+        tid = F.col("tid") if "tid" in j.columns else F.lit(None).cast("int")
+        parts.append(j.select(F.lit(pred).alias("pred"), "pid", tid.alias("tid")))
+    return _rows(reduce(lambda a, b: a.union(b), parts), "pred", "pid", "tid")
+
+
+@pytest.fixture(scope="module")
+def probe_sides(spark):
+    """The probe test sides, read in Arrow batches of 16 rows so the
+    non-point tail lands past the first batch of its partition."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    lrows, rrows = _probe_left_rows(), _probe_right_rows()
+    yield (lrows, rrows, spark.createDataFrame(lrows, "pid LONG, geom BINARY"),
+           spark.createDataFrame(rrows, "tid INT, geom BINARY"))
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("how", _HOWS)
+def test_broadcast_probe_matches_bruteforce(probe_sides, how):
+    lrows, rrows, left, right = probe_sides
+    assert _every_predicate(left, right, how, True) == _bruteforce(lrows, rrows, how)
+
+
+def test_cell_join_matches_bruteforce_on_probe_inputs(probe_sides):
+    """The cell join (``broadcast_right=False``) on the same inputs. A full
+    join's rows hold the inner, left and right joins' rows."""
+    lrows, rrows, left, right = probe_sides
+    assert _every_predicate(left, right, "full", False) == _bruteforce(lrows, rrows, "full")
