@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from typing import List, Optional, Sequence, Union
 
 import numpy as np
+import pyarrow as pa
 
 # -- geometry type ids (ISO WKB) --------------------------------------------
 POINT = 1
@@ -527,41 +528,54 @@ def encode_segments_xy(x1, y1, x2, y2) -> np.ndarray:
     return _rows_to_objects(rec, nbytes)
 
 
-def decode_points_xy(bufs: Sequence[Optional[bytes]]):
-    """Vectorized decode of an XY-point WKB column.
-
-    Returns (x, y, valid_mask). Falls back to the generic parser for any
-    row that is not a plain little-endian XY point (mixed columns still
-    work, just slower for the odd rows).
-    """
-    n = len(bufs)
-    x = np.full(n, np.nan)
-    y = np.full(n, np.nan)
-    valid = np.zeros(n, dtype=bool)
-    fast_idx = []
-    fast_bufs = []
-    slow_idx = []
-    for i, b in enumerate(bufs):
-        if b is None:
-            continue
-        b = bytes(b)
-        if len(b) == _POINT_XY_NBYTES and b[0] == 1 and b[1] == POINT and b[2:5] == b"\x00\x00\x00":
-            fast_idx.append(i)
-            fast_bufs.append(b)
+def xy_env(bufs):
+    """``(x, y, env, geoms)`` of a WKB column (an Arrow binary array or a
+    sequence of bytes): point x/y, (n, 4) envelopes (NaN: NULL, empty) and
+    ``{row: Geometry}`` of the non-NULL rows that are not little-endian XY
+    points. Those points are read from the offset and data buffers; only
+    the other rows reach Python, one parse each."""
+    arr = bufs if isinstance(bufs, pa.Array) else pa.array(bufs, pa.binary())
+    n = len(arr)
+    x, y, env, geoms = np.full(n, np.nan), np.full(n, np.nan), np.full((n, 4), np.nan), {}
+    live = ~arr.is_null().to_numpy(zero_copy_only=False)
+    _, obuf, dbuf = arr.buffers()
+    odt = np.dtype(np.int64 if pa.types.is_large_binary(arr.type) else np.int32)
+    offs = np.frombuffer(obuf, odt, n + 1, arr.offset * odt.itemsize).astype(np.int64)
+    fi = np.nonzero(live & (np.diff(offs) == _POINT_XY_NBYTES))[0]
+    if len(fi):
+        w = _POINT_XY_NBYTES
+        if offs[fi[-1]] - offs[fi[0]] == w * (len(fi) - 1):  # back to back: a view
+            raw = np.frombuffer(dbuf, np.uint8, w * len(fi), offs[fi[0]]).reshape(-1, w)
         else:
-            slow_idx.append(i)
-    if fast_bufs:
-        raw = np.frombuffer(b"".join(fast_bufs), dtype=np.uint8).reshape(-1, _POINT_XY_NBYTES)
-        fi = np.array(fast_idx)
+            raw = np.frombuffer(dbuf, np.uint8)[offs[fi, None] + np.arange(w)]
+        le = (raw[:, :5] == np.frombuffer(_LE_POINT_HDR, np.uint8)).all(axis=1)
+        fi, raw = fi[le], raw[le]
         x[fi] = raw[:, 5:13].copy().view("<f8").ravel()
         y[fi] = raw[:, 13:21].copy().view("<f8").ravel()
-        valid[fi] = True
-    for i in slow_idx:
-        g = parse(bufs[i])
-        if g is not None and g.type_id == POINT and len(g.coords):
-            x[i] = g.coords[0, 0]
-            y[i] = g.coords[0, 1]
-            valid[i] = True
+        env[fi] = np.stack([x[fi], y[fi], x[fi], y[fi]], axis=1)
+    live[fi] = False
+    rest = np.nonzero(live)[0]
+    for i, b in zip(rest.tolist(), arr.take(pa.array(rest, pa.int64())).to_pylist()):
+        g = geoms[i] = parse(b)
+        c = g.all_coords()
+        if len(c):
+            env[i] = c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max()
+        if g.type_id == POINT and len(g.coords):
+            x[i], y[i] = g.coords[0, 0], g.coords[0, 1]
+    return x, y, env, geoms
+
+
+def decode_points_xy(bufs):
+    """``(x, y, valid)`` of a WKB point column (an Arrow binary array or a
+    sequence of bytes), decoded by ``xy_env``. Valid: a point with
+    coordinates in any encoding (Z/M included), or a little-endian XY
+    ``POINT EMPTY`` (NaN coordinates); NULL, non-point rows and an EMPTY
+    in any other encoding are invalid."""
+    arr = bufs if isinstance(bufs, pa.Array) else pa.array(bufs, pa.binary())
+    x, y, _, geoms = xy_env(arr)
+    valid = ~arr.is_null().to_numpy(zero_copy_only=False)
+    for i, g in geoms.items():
+        valid[i] = g.type_id == POINT and len(g.coords) > 0
     return x, y, valid
 
 

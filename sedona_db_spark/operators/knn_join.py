@@ -1,9 +1,21 @@
-"""Grid-based k-nearest-neighbor join (ST_KNN).
+"""k-nearest-neighbor join (ST_KNN): one broadcast pass, or a grid.
 
 The reference implements kNN with a global R-tree neighbor search plus
 optional tie-breakers (`rust/sedona-spatial-join/src/index.rs:499-676`),
 accepting ANY build geometry (rect-distance prune + exact refine).
-Distributed from scratch, we use ring expansion over the quadkey grid:
+
+BROADCAST — a build side of at most ``broadcast_threshold`` rows (the
+distributed analogue of the shared in-memory index: on a cluster "shared
+memory" is a broadcast variable). The build side is collected ONCE as
+Arrow, classified and decoded on the driver, and broadcast with its
+columns. One ``mapInArrow`` pass per probe Arrow batch decodes the probe
+points strictly from the Arrow buffers, solves every probe's top k exactly
+with numpy and appends the matched build columns by ``take``: no row ids,
+no shuffle, no payload join. Each collected build row is its own entry,
+so identical build rows each count toward k; ties break by ``build_id``,
+else by a content hash of the build row.
+
+GRID — larger build sides, by ring expansion over the quadkey grid:
 
     1. index the BUILD (object) side by cell at level L — points by their
        cell, rectangles/general geometries by every cell their envelope
@@ -23,9 +35,10 @@ Distributed from scratch, we use ring expansion over the quadkey grid:
 Build-side geometry modes, a set test over the ``wkb.shape_kinds`` codes of
 EVERY build row (never a sample's) — on the driver from the capped collect,
 or by one Spark job (``spatial_join._side_kinds``) past the cap:
-    * point   — all-JVM squared-distance rank key (any point encoding);
+    * point   — squared-distance rank key (any point encoding; all-JVM on
+                the grid route);
     * rect    — axis-aligned rectangles (and points): distance via
-                max(0, x0-px, px-x1) math, still pure-column;
+                max(0, x0-px, px-x1) math (pure-column on the grid route);
     * general — exact `algos.points_to_geometry_distance` grouped by build
                 geometry per Arrow batch (envelope cells as prefilter).
 The round-1 build silently DROPPED non-point build rows (VERDICT item 4);
@@ -43,13 +56,17 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StringType
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType, MapType,
+                               StructField, StructType)
 
 from ..geometry import algos, wkb
 from ..tiling import Grid
-from .spatial_join import _once, _point_xy, _raise_on_nonpoint, _side_kinds
+from .spatial_join import (_log_plan, _once, _point_xy, _raise_on_nonpoint, _side_kinds,
+                           _wide_id)
 
 
 def _points_xy(df: DataFrame, geom_col: str, xname: str, yname: str,
@@ -64,6 +81,13 @@ def _points_xy(df: DataFrame, geom_col: str, xname: str, yname: str,
     return (df.withColumn("_xy", xy)
             .withColumn(xname, F.col("_xy.x")).withColumn(yname, F.col("_xy.y"))
             .drop("_xy"))
+
+
+def _hashable(df: DataFrame):
+    """The columns of ``df`` as hash inputs: a map, which Spark refuses to
+    hash, as its sorted entries."""
+    return [F.array_sort(F.map_entries(F.col(f.name))) if isinstance(f.dataType, MapType)
+            else F.col(f.name) for f in df.schema.fields]
 
 
 def _build_mode(kinds) -> str:
@@ -84,18 +108,17 @@ def _unit_xyz(lon, lat) -> np.ndarray:
                      np.sin(lat)], axis=1)
 
 
-def _topk_frame(pdf, rows, cols, dv, k, bid, ties: bool, sqrt: bool):
-    """Emit each probe row's top k from candidate (probe row, build
-    position, rank key) triples, vectorised: one lexsort by (probe, key,
-    build position — the tie order), cut to k per probe by position.
-    ``ties``: every candidate comes back with its competition rank over
-    the key; the candidates hold every key up to the k-th, so that rank is
-    1 + the position of the first equal key. ``sqrt``: the key is a
-    squared distance."""
+def _topk(rows, cols, dv, n, k, ties: bool):
+    """Each probe row's top k from candidate (probe row, build position,
+    rank key) triples, vectorised: one lexsort by (probe, key, build
+    position — the tie order), cut to k per probe by position. Returns
+    ``(rows, cols, key, rank)``. ``ties``: every candidate comes back with
+    its competition rank over the key; the candidates hold every key up to
+    the k-th, so that rank is 1 + the position of the first equal key."""
     order = np.lexsort((cols, dv, rows))
     rows, cols, dv = rows[order], cols[order], dv[order]
     at = np.arange(len(rows))
-    pos = at - np.searchsorted(rows, np.arange(len(pdf)))[rows]
+    pos = at - np.searchsorted(rows, np.arange(n))[rows]
     if ties:
         first = np.ones(len(rows), dtype=bool)
         first[1:] = (rows[1:] != rows[:-1]) | (dv[1:] != dv[:-1])
@@ -104,11 +127,7 @@ def _topk_frame(pdf, rows, cols, dv, k, bid, ties: bool, sqrt: bool):
     else:
         rank = pos + 1
         keep = pos < k
-    out = pdf.iloc[rows[keep]].reset_index(drop=True)
-    out["_bid_m"] = bid[cols[keep]]
-    out["knn_distance"] = np.sqrt(dv[keep]) if sqrt else dv[keep]
-    out["knn_rank"] = rank[keep].astype(np.int32)
-    return out
+    return rows[keep], cols[keep], dv[keep], rank[keep]
 
 
 def _bounds_cols(df: DataFrame, geom_col: str) -> DataFrame:
@@ -148,74 +167,40 @@ def _gdist_udf():
     return gdist
 
 
-def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
-                   build_id, use_spheroid: bool, include_ties: bool,
-                   build_geom_col: str, probe_geom_col: str,
-                   brows=None) -> DataFrame:
-    """Exact kNN with the build side broadcast: per probe Arrow batch, one
-    vectorized (batch x n_build) distance matrix + vectorized top-k. The
-    probe WKB is decoded inside the same Python pass (strictly: a non-point
-    row raises), so the probe side costs one Arrow round trip.
-
-    The build side is collected ONCE (raw WKB) and classified/decoded on
-    the driver — no extra classification or coordinate-derivation Spark
-    jobs, which at bench scale dominate the wall time. persist() happens
-    BEFORE the collect so the later rejoin on _bid_m reads the same
-    materialization and synthetic ids cannot diverge (ADVICE item 1)."""
-    tie_col = f"_b_{build_id}" if build_id else "_bid"
-    if brows is None:
-        B = B.persist()
-        brows = B.select("_bid", build_geom_col, tie_col).collect()
-    # else: the caller already persisted B and hands us its capped collect
-    # (one driver job instead of count + collect)
-    brows = [r for r in brows if r[build_geom_col] is not None]
-    bufs = [bytes(r[build_geom_col]) for r in brows]
-    mode = _build_mode(wkb.shape_kinds(bufs).tolist())
+def _broadcast_knn(P: DataFrame, B: DataFrame, build: pa.Table, k: int, probe_geom_col: str,
+                   build_geom_col: str, tie_col: str, use_spheroid: bool,
+                   include_ties: bool):
+    """Exact kNN against ``build``, the collected columns of ``B`` plus the
+    tie key ``tie_col`` (module docstring, BROADCAST). Returns the joined
+    ``_p_``/``_b_`` frame with ``knn_distance`` and ``knn_rank``, the build
+    mode and ``k_eff``."""
+    geo = build.column(build_geom_col).combine_chunks()
+    mode = _build_mode(wkb.shape_kinds(geo.to_pylist()).tolist())
+    x, y, env, _ = wkb.xy_env(geo)
+    # NULL and EMPTY rows are never neighbours; the rest in tie-key order
+    live = np.nonzero(~np.isnan(env).any(axis=1))[0]
+    keep = live[pc.sort_indices(build.column(tie_col).take(live)).to_numpy()]
     if mode == "point":
-        x, y, valid = wkb.decode_points_xy(bufs)
-        # POINT EMPTY (NaN coordinates in LE, invalid otherwise) matches nothing
-        keep_idx = np.nonzero(valid & ~np.isnan(x) & ~np.isnan(y))[0]
-        payload = (x[keep_idx], y[keep_idx])
+        payload = (x[keep], y[keep])
     elif mode == "rect":
-        bb = np.array([algos.bounds(wkb.parse(b)) for b in bufs])
-        valid = ~np.isnan(bb[:, 0])
-        keep_idx = np.nonzero(valid)[0]
-        payload = tuple(bb[keep_idx, i] for i in range(4))
+        payload = tuple(env[keep, c] for c in range(4))
     else:
-        keep_idx = []
-        payload = []
-        for i, b in enumerate(bufs):
-            g = wkb.parse(b)
-            if g is not None and not g.is_empty:
-                keep_idx.append(i)
-                payload.append(b)
-        keep_idx = np.array(keep_idx, dtype=np.int64)
-    bid = np.array([r["_bid"] for r in brows], dtype=object)[keep_idx]
-    tie = np.array([brows[int(i)][tie_col] for i in keep_idx])
-    order0 = np.argsort(tie, kind="stable")
-    bid = bid[order0]
-    if mode in ("point", "rect"):
-        payload = tuple(a[order0] for a in payload)
-    else:
-        payload = [payload[i] for i in order0]
-    bc = spark.sparkContext.broadcast((bid, payload))
-    k_eff = min(k, len(bid))
-
-    from pyspark.sql.types import StructField, StructType
-
+        payload = geo.take(pa.array(keep, pa.int64())).to_pylist()
+    bcols = B.columns
+    rows_b = pa.RecordBatch.from_arrays(
+        [build.column(c).take(pa.array(keep, pa.int64())).combine_chunks() for c in bcols],
+        names=bcols)
+    bc = P.sparkSession.sparkContext.broadcast((payload, rows_b))
+    k_eff = min(k, len(keep))
+    gi = P.columns.index(probe_geom_col)
     out_schema = StructType(
-        list(P.schema.fields)
-        + [
-            StructField("_bid_m", StringType()),
-            StructField("knn_distance", DoubleType()),
-            StructField("knn_rank", IntegerType()),
-        ]
-    )
+        P.schema.fields + B.schema.fields
+        + [StructField("knn_distance", DoubleType()), StructField("knn_rank", IntegerType())])
 
     def solve(batches):
-        bid_, payload_ = bc.value
+        payload_, rows_b_ = bc.value
         parsed = [None]  # lazily parsed geometries (general mode)
-        n_build_local = max(1, len(bid_))
+        n_build_local = max(1, rows_b_.num_rows)
         # Point-kNN prune: rank the build side by one (batch x 3) @
         # (3 x n_build) GEMM key — BLAS flops instead of a full distance
         # matrix — keep every key within a rounding bound of the kk-th
@@ -259,7 +244,7 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
             rmax = float(np.hypot(bxc[fin], byc[fin]).max()) if fin.any() else 0.0
             key = np.ascontiguousarray(np.stack([bxc, byc, -(bxc * bxc + byc * byc) / 2.0]))
 
-        def solve_pruned(pdf, px, py):
+        def solve_pruned(px, py):
             n = len(px)
             bx_, by_ = payload_
             if use_spheroid:
@@ -282,11 +267,11 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
                 dvx = px[rows] - bx_[cols]
                 dvy = py[rows] - by_[cols]
                 dv = dvx * dvx + dvy * dvy  # squared rank key
-            return _topk_frame(pdf, rows, cols, dv, k_eff, bid_, False, not use_spheroid)
+            return _topk(rows, cols, dv, n, k_eff, False)
 
-        def solve_block(pdf, px, py):
+        def solve_block(px, py):
             if prune:
-                return solve_pruned(pdf, px, py)
+                return solve_pruned(px, py)
             n = len(px)
             dx, dy, d = buf_a[:n], buf_b[:n], buf_d[:n]
             if mode == "point":
@@ -339,34 +324,26 @@ def _broadcast_knn(spark, P: DataFrame, B: DataFrame, k: int, pcols, bcols,
             mask = buf_m[:n]
             np.less_equal(d, kth[:, k_eff - 1, None], out=mask)
             rows, cols = np.nonzero(mask)
-            return _topk_frame(pdf, rows, cols, d[rows, cols], k_eff, bid_,
-                               include_ties, not use_spheroid)
+            return _topk(rows, cols, d[rows, cols], n, k_eff, include_ties)
 
-        # probes stream through in blocks matching the preallocated scratch
-        for pdf0 in batches:
-            geoms = pdf0[probe_geom_col]
-            x0, y0, ok = wkb.decode_points_xy(list(geoms))
+        # probes stream through in blocks matching the preallocated scratch;
+        # each match leaves as the probe row, the build row and its key
+        for batch in batches:
+            geoms = batch.column(gi)
+            x0, y0, ok = wkb.decode_points_xy(geoms)
             _raise_on_nonpoint(geoms, ok, "probe", "knn_join")
-            keep = ok & ~np.isnan(x0)  # NULL / POINT EMPTY probes match nothing
-            pdf0, x0, y0 = pdf0[keep], x0[keep], y0[keep]
-            for lo in range(0, len(pdf0), block_rows):
-                hi = lo + block_rows
-                yield solve_block(pdf0.iloc[lo:hi], x0[lo:hi], y0[lo:hi])
+            live_p = np.nonzero(ok & ~np.isnan(x0))[0]  # NULL / POINT EMPTY match nothing
+            for lo in range(0, len(live_p) if k_eff else 0, block_rows):
+                at = live_p[lo:lo + block_rows]
+                rows, cols, dv, rank = solve_block(x0[at], y0[at])
+                yield pa.RecordBatch.from_arrays(
+                    batch.take(pa.array(at[rows], pa.int64())).columns
+                    + rows_b_.take(pa.array(cols, pa.int64())).columns
+                    + [pa.array(dv if use_spheroid else np.sqrt(dv)),
+                       pa.array(rank.astype(np.int32))],
+                    names=out_schema.names)
 
-    res = P.mapInPandas(solve, out_schema)
-    drop_cols = [c for c in ("_bx", "_by", "_bx0", "_by0", "_bx1", "_by1") if c in B.columns]
-    Bj = F.broadcast(B.withColumnRenamed("_bid", "_bid_m").drop(*drop_cols))
-    joined = res.join(Bj, "_bid_m")
-    # re-expand collapsed duplicate probe rows to their input multiplicity
-    joined = joined.withColumn(
-        "_dup", F.explode(F.sequence(F.lit(1), F.col("_pmult").cast("int")))
-    )
-    out_cols = (
-        [F.col(f"_p_{c}").alias(c) for c in pcols]
-        + [F.col(f"_b_{c}").alias(c) for c in bcols]
-        + [F.col("knn_distance"), F.col("knn_rank").cast("int").alias("knn_rank")]
-    )
-    return joined.select(*out_cols)
+    return P.mapInArrow(solve, out_schema), mode, k_eff
 
 
 def knn_join(
@@ -417,85 +394,42 @@ def knn_join(
 
     # prefix both sides so duplicate column names can't collide (same
     # contract as spatial_join; output restores original names)
-    #
-    # Row ids are CONTENT-DERIVED (round-2 VERDICT item 3: the mii ids the
-    # round-1 build used are recomputation-dependent, so cache eviction
-    # between the escalation loop's jobs could silently mis-rank). The
-    # probe side COLLAPSES exact-duplicate rows first (identical probes
-    # have identical kNN results — compute once, re-expand by multiplicity
-    # at the end), which makes the content hash row-unique by construction
-    # AND shrinks every downstream stage on duplicate-heavy corpora. The
-    # build side disambiguates duplicates with a row_number within each
-    # content-hash group: which physical copy gets which index is
-    # arbitrary, but copies are identical, so the (row, id) multiset is
-    # deterministic under recomputation — unlike mii.
     pcols, bcols = probe.columns, build.columns
     P = probe.select([F.col(c).alias(f"_p_{c}") for c in pcols])
-    P = P.groupBy(P.columns).agg(F.count(F.lit(1)).alias("_pmult"))
-    P = P.withColumn(
-        "_pid",
-        F.concat_ws(
-            "|",
-            F.xxhash64(F.lit(7), *[F.col(f"_p_{c}") for c in pcols]).cast("string"),
-            F.xxhash64(F.lit(8), *[F.col(f"_p_{c}") for c in pcols]).cast("string"),
-        ),
-    )
     B = build.select([F.col(c).alias(f"_b_{c}") for c in bcols])
-    _bh = F.xxhash64(F.lit(9), *[F.col(c) for c in B.columns])
-    B = B.withColumn("_bh", _bh).withColumn(
-        "_bid",
-        F.concat_ws(
-            "|",
-            F.col("_bh").cast("string"),
-            F.xxhash64(F.lit(10), *[F.col(f"_b_{c}") for c in bcols]).cast("string"),
-            F.row_number()
-            .over(Window.partitionBy("_bh").orderBy(F.lit(0)))
-            .cast("string"),
-        ),
-    ).drop("_bh")
+    out_cols = (
+        [F.col(f"_p_{c}").alias(c) for c in pcols]
+        + [F.col(f"_b_{c}").alias(c) for c in bcols]
+        + [F.col("knn_distance"), F.col("knn_rank")]
+    )
     # probe side must be puntal: sampled check raises loudly instead of the
     # round-1 silent drop; a full scan of the 10^12-row probe side just to
     # type-check would double the job, so the guard is a 1k sample + the
-    # strict decode in the probe's one Python pass. The sample reads the
-    # RAW probe: P is groupBy-collapsed, so sampling it runs a shuffle.
+    # strict decode in the probe's one Python pass.
     psample = [r[0] for r in probe.select(probe_geom).limit(1000).collect()]
     if not np.all(np.isin(wkb.shape_kinds(psample), (wkb.KIND_NULL, wkb.KIND_POINT))):
         raise NotImplementedError("knn_join probe side must be point geometries")
 
     bgeom = f"_b_{build_geom}"
 
-    @F.pandas_udf(LongType())
-    def cell_of(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(grid.cell_of_points(x.to_numpy(np.float64), y.to_numpy(np.float64)))
-
-    # --- small build side: broadcast the whole build table and solve each
-    # probe batch exactly with numpy (the distributed analogue of the
-    # reference's shared in-memory R-tree — on a cluster "shared memory"
-    # = a broadcast variable). No shuffle of the probe side at all; build
-    # classification and coordinate decode happen driver-side from the one
-    # collect, so the whole path is count + collect + one execute job.
-    # ONE capped collect decides the small-build broadcast route AND
-    # provides its rows: a limit(cap+1) over the persisted build side
-    # replaces the previous count-then-collect pair (two driver jobs).
-    # Only when the build side exceeds the cap do we pay a real count.
+    # --- BROADCAST (module docstring): ONE capped collect decides the route
+    # AND provides the build rows; only past the cap do we pay a real
+    # count. The tie key is the grid path's content id without its
+    # duplicate counter, so distinct rows tie-break in the same order.
     cap = min(broadcast_threshold, 20_000)
-    tie_col = f"_b_{build_id}" if build_id else "_bid"
-    B = B.persist()
-    _head = B.select("_bid", bgeom, tie_col).limit(cap + 1).collect()
-    if len(_head) <= cap:
-        return _broadcast_knn(
-            spark, P, B, k, pcols, bcols, build_id,
-            use_spheroid=use_spheroid, include_ties=include_ties,
-            build_geom_col=bgeom, probe_geom_col=f"_p_{probe_geom}", brows=_head,
-        )
-    n_build = B.count()
-    mode = _build_mode(_side_kinds(B, bgeom))
-    if n_build <= broadcast_threshold and (mode != "general" or use_spheroid):
-        return _broadcast_knn(
-            spark, P, B, k, pcols, bcols, build_id,
-            use_spheroid=use_spheroid, include_ties=include_ties,
-            build_geom_col=bgeom, probe_geom_col=f"_p_{probe_geom}",
-        )
+    tie_col = f"_b_{build_id}" if build_id else "_tie"
+    Bt = B if build_id else B.withColumn("_tie", _wide_id(9, _hashable(B)))
+    rows = Bt.limit(cap + 1).toArrow()
+    n_build = rows.num_rows
+    if n_build > cap:
+        n_build, mode = B.count(), _build_mode(_side_kinds(B, bgeom))
+        small = n_build <= broadcast_threshold and (mode != "general" or use_spheroid)
+        rows = Bt.toArrow() if small else None
+    if rows is not None:
+        res, mode, k_eff = _broadcast_knn(P, B, rows, k, f"_p_{probe_geom}", bgeom, tie_col,
+                                          use_spheroid, include_ties)
+        _log_plan("knn_join", route="broadcast", build_rows=n_build, build_mode=mode, k_eff=k_eff)
+        return res.select(*out_cols)
     if mode != "point" and use_spheroid:
         # the grid ring-escalation prune is planar; non-point spheroid kNN
         # is served by the exact broadcast path above (the reference's
@@ -504,6 +438,28 @@ def knn_join(
             "use_spheroid kNN with a non-point build side is supported up "
             f"to broadcast_threshold={broadcast_threshold} build rows"
         )
+
+    # --- grid path. Row ids are CONTENT-DERIVED (round-2 VERDICT item 3:
+    # the mii ids the round-1 build used are recomputation-dependent, so
+    # cache eviction between the escalation loop's jobs could silently
+    # mis-rank). The probe side COLLAPSES exact-duplicate rows first
+    # (identical probes have identical kNN results — compute once,
+    # re-expand by multiplicity at the end), which makes the content hash
+    # row-unique by construction AND shrinks every downstream stage on
+    # duplicate-heavy corpora. The build side disambiguates duplicates with
+    # a row_number within each content-hash group: which physical copy gets
+    # which index is arbitrary, but copies are identical, so the (row, id)
+    # multiset is deterministic under recomputation — unlike mii.
+    P = P.groupBy(P.columns).agg(F.count(F.lit(1)).alias("_pmult"))
+    P = P.withColumn("_pid", _wide_id(7, [F.col(f"_p_{c}") for c in pcols]))
+    _bh = _wide_id(9, _hashable(B))
+    B = B.withColumn("_bid", F.concat_ws(
+        "|", _bh, F.row_number().over(Window.partitionBy(_bh).orderBy(F.lit(0))).cast("string")))
+
+    @F.pandas_udf(LongType())
+    def cell_of(x: pd.Series, y: pd.Series) -> pd.Series:
+        return pd.Series(grid.cell_of_points(x.to_numpy(np.float64), y.to_numpy(np.float64)))
+
     P = _points_xy(P, f"_p_{probe_geom}", "_px", "_py", strict=True).where(
         F.col("_px").isNotNull()
     )
@@ -539,6 +495,7 @@ def knn_join(
     # NULL or POINT EMPTY row can never be found, and a probe waiting for
     # it would escalate through every pass. A point is one histogram entry.
     k_eff = min(k, int(counts.sum()) if mode == "point" else B.count())
+    _log_plan("knn_join", route="grid", build_rows=n_build, build_mode=mode, k_eff=k_eff)
     hix, hiy = grid.unpack(cells)
     nx = grid.nx
     # dense 2D prefix-sum for O(1) ring-count queries; level 8 -> 256x256 ints
@@ -698,10 +655,5 @@ def knn_join(
     # re-expand collapsed duplicate probe rows to their input multiplicity
     result = result.withColumn(
         "_dup", F.explode(F.sequence(F.lit(1), F.col("_pmult").cast("int")))
-    )
-    out_cols = (
-        [F.col(f"_p_{c}").alias(c) for c in pcols]
-        + [F.col(f"_b_{c}").alias(c) for c in bcols]
-        + [F.col("knn_distance"), F.col("knn_rank")]
     )
     return result.select(*out_cols)

@@ -4,15 +4,16 @@ The reference's `SpatialJoinExec` (`rust/sedona-spatial-join/src/exec.rs`)
 builds ONE in-memory index over the build side, probes it and refines the
 candidates in the same operator. Two routes serve that contract here.
 
-BROADCAST PROBE (``_broadcast_probe``) — relation predicates with a
-broadcast right side and no ``left_xy``: BUILD a columnar cell index over
-the collected right side on the driver (``_ProbeIndex``) and broadcast it;
-PROBE it with ``np.searchsorted`` and REFINE exactly in one ``mapInArrow``
-pass per left Arrow batch; bring the right payload back by a broadcast
-hash join on ``_rid``.
+BROADCAST PROBE (``_broadcast_probe``) — every predicate, relations and
+``dwithin``, with a broadcast right side and no ``left_xy``: BUILD a
+columnar cell index over the collected right side on the driver
+(``_ProbeIndex``; for ``dwithin`` each build envelope is expanded by its
+own distance) and broadcast it; PROBE it with ``np.searchsorted`` and
+REFINE exactly in one ``mapInArrow`` pass per left Arrow batch; bring the
+right payload back by a broadcast hash join on ``_rid``.
 
-CELL JOIN — shuffled right sides, ``dwithin`` and ``left_xy`` joins (the
-latter with zero Python in the plan, the streaming path):
+CELL JOIN — shuffled right sides and ``left_xy`` joins (the latter with
+zero Python in the plan, the streaming path):
 
     1. PREFILTER  — cover each geometry with quadkey grid cells
                     (`tiling.Grid`): points → exactly 1 cell (cheap,
@@ -36,8 +37,8 @@ Join types Inner/Left/Right/Semi/Anti mirror `exec.rs:102-109` +
 `stream.rs:292-388` (the cell join's unmatched tracking is an anti-join on
 matched ids instead of the reference's visited-bitmap).
 
-Distance joins (ST_DWithin) expand the probe envelope by the distance
-before covering — the analogue of `operand_evaluator.rs:307`
+Distance joins (ST_DWithin) expand each build envelope by its distance
+before indexing or covering it — the analogue of `operand_evaluator.rs:307`
 (`expand_rect_in_place`).
 
 Kernel dispatch by argument type: every route decision (point left side,
@@ -50,8 +51,10 @@ side, and a fast route needs the codes of EVERY row, never a sample's:
 * a non-broadcast right side is classified by one Spark job
   (``_side_kinds``), run only when the free 1000-row sample allows a fast
   route;
-* the left/probe side is confirmed in the JVM (``_point_offenders``):
-  only the rows that are not little-endian XY points are classified.
+* the left side of a cell join is confirmed in the JVM
+  (``_point_offenders``): only the rows that are not little-endian XY
+  points are classified. The broadcast probe needs no confirm: it picks
+  the kernel of each row as it decodes it.
 
 Each call logs its route on the ``sedona_db_spark.plan`` logger.
 """
@@ -90,13 +93,16 @@ _PLAN_LOG = logging.getLogger("sedona_db_spark.plan")
 _KIND_NAMES = ("null", "point", "rect", "areal", "other")  # wkb.KIND_* codes
 
 
-def _log_route(route: str, est_bytes, build_rows, kinds, grid_level: int) -> None:
+def _log_plan(op: str, **plan) -> None:
     """One INFO record per join on the ``sedona_db_spark.plan`` logger: the
     route taken and what decided it. ``record.plan`` holds the fields."""
-    plan = {"route": route, "est_bytes": est_bytes, "build_rows": build_rows,
-            "right_kinds": sorted(_KIND_NAMES[k] for k in kinds), "grid_level": grid_level}
-    _PLAN_LOG.info("spatial_join %s", " ".join(f"{k}={v}" for k, v in plan.items()),
+    _PLAN_LOG.info("%s %s", op, " ".join(f"{k}={v}" for k, v in plan.items()),
                    extra={"plan": plan})
+
+
+def _log_route(route: str, est_bytes, build_rows, kinds, grid_level: int) -> None:
+    _log_plan("spatial_join", route=route, est_bytes=est_bytes, build_rows=build_rows,
+              right_kinds=sorted(_KIND_NAMES[k] for k in kinds), grid_level=grid_level)
 
 
 def _wide_id(seed: int, cols):
@@ -142,9 +148,6 @@ _INVERT = {  # mirrors SpatialPredicate::invert (spatial_predicate.rs:217-229)
     "covered_by": "covers",
 }
 
-
-_LE_POINT_HDR = b"\x01\x01\x00\x00\x00"  # little-endian XY POINT
-
 # predicates with a point x polygon kernel (left point PRED right polygon)
 _PIP_PREDS = ("within", "covered_by", "intersects", "touches")
 _AREAL_KINDS = {wkb.KIND_RECT, wkb.KIND_AREAL}
@@ -158,7 +161,7 @@ def _is_le_point_expr(col: str):
     points fail it too); ``_point_offenders`` and ``_side_kinds`` hand
     exactly those rows to ``wkb.shape_kinds``."""
     return (F.length(col) == 21) & (
-        F.expr(f"substring(`{col}`, 1, 5)") == F.lit(_LE_POINT_HDR)
+        F.expr(f"substring(`{col}`, 1, 5)") == F.lit(wkb._LE_POINT_HDR)
     )
 
 
@@ -201,7 +204,7 @@ def _raise_on_nonpoint(bufs, valid, side: str, op: str) -> None:
     all-valid batch returns at once."""
     if bool(np.all(valid)):
         return
-    bufs = list(bufs)
+    bufs = bufs.to_pylist() if isinstance(bufs, pa.Array) else list(bufs)
     kinds = wkb.shape_kinds([bufs[i] for i in np.nonzero(~np.asarray(valid))[0]])
     if np.any((kinds != wkb.KIND_NULL) & (kinds != wkb.KIND_POINT)):
         raise ValueError(
@@ -235,7 +238,7 @@ def _point_xy(geom: Column, strict: Optional[tuple] = None,
 
     @F.pandas_udf(StructType(fields))
     def point_xy(s: pd.Series) -> pd.DataFrame:
-        x, y, valid = wkb.decode_points_xy(list(s))
+        x, y, valid = wkb.decode_points_xy(s)
         if strict is not None:
             _raise_on_nonpoint(s, valid, *strict)
         out = pd.DataFrame({"x": np.where(valid, x, np.nan),
@@ -256,7 +259,7 @@ def _point_xy(geom: Column, strict: Optional[tuple] = None,
 def _bounds_udf():
     @F.pandas_udf("xmin double, ymin double, xmax double, ymax double")
     def geom_bounds(s: pd.Series) -> pd.DataFrame:
-        env = _xy_env(pa.array(s, pa.binary()))[2]
+        env = wkb.xy_env(s)[2]
         return pd.DataFrame(env, columns=["xmin", "ymin", "xmax", "ymax"])
 
     return _once(geom_bounds)
@@ -284,35 +287,6 @@ def _env_cells(grid: Grid, env: np.ndarray, cap: Optional[int] = None):
     return row, grid.pack(ix0[row] + k % w[row], iy0[row] + k // w[row]), cnt
 
 
-def _xy_env(arr: pa.Array):
-    """``(x, y, env, geoms)`` of a binary Arrow array of WKB: point x/y,
-    (n, 4) envelopes (NaN: NULL, empty) and the parsed geometry of rows
-    that are not LE XY points. Those are read from the offset and data
-    buffers; only the other non-NULL rows reach Python, one parse each."""
-    n = len(arr)
-    x, y, env, geoms = np.full(n, np.nan), np.full(n, np.nan), np.full((n, 4), np.nan), [None] * n
-    live = ~arr.is_null().to_numpy(zero_copy_only=False)
-    _, obuf, dbuf = arr.buffers()
-    odt = np.dtype(np.int64 if pa.types.is_large_binary(arr.type) else np.int32)
-    offs = np.frombuffer(obuf, odt, n + 1, arr.offset * odt.itemsize).astype(np.int64)
-    fi = np.nonzero(live & (np.diff(offs) == 21))[0]
-    if len(fi):
-        raw = np.frombuffer(dbuf, np.uint8)[offs[fi, None] + np.arange(21)]
-        le = (raw[:, :5] == np.frombuffer(_LE_POINT_HDR, np.uint8)).all(axis=1)
-        fi, raw = fi[le], raw[le]
-        x[fi] = raw[:, 5:13].copy().view("<f8").ravel()
-        y[fi] = raw[:, 13:21].copy().view("<f8").ravel()
-        env[fi] = np.stack([x[fi], y[fi], x[fi], y[fi]], axis=1)
-    live[fi] = False
-    rest = np.nonzero(live)[0]
-    for i, b in zip(rest, arr.take(pa.array(rest, pa.int64())).to_pylist()):
-        g = geoms[i] = wkb.parse(b)
-        env[i] = algos.bounds(g)
-        if g.type_id == wkb.POINT and len(g.coords):
-            x[i], y[i] = g.coords[0, 0], g.coords[0, 1]
-    return x, y, env, geoms
-
-
 def _cover_cells_udf(grid: Grid):
     """(geometry, expansion distance) -> ``struct<x, y, cells>``: the
     cells the expanded envelope overlaps (null for NULL/empty geometry or
@@ -322,7 +296,7 @@ def _cover_cells_udf(grid: Grid):
 
     @F.pandas_udf(schema)
     def cover(s: pd.Series, d: pd.Series) -> pd.DataFrame:
-        x, y, env, _ = _xy_env(pa.array(s, pa.binary()))
+        x, y, env, _ = wkb.xy_env(s)
         dd = d.to_numpy(np.float64, na_value=np.nan)[:, None]
         env = env + np.array([-1.0, -1.0, 1.0, 1.0]) * dd
         _, cells, cnt = _env_cells(grid, env)
@@ -336,7 +310,28 @@ def _cover_cells_udf(grid: Grid):
     return _once(cover)
 
 
-def _refine_udf(predicate: str, distance_expr_is_col: bool):
+def _dwithin_pairs(abuf, bbuf, dd: np.ndarray) -> np.ndarray:
+    """``DWithin(a, b, d)`` of aligned WKB pairs (None: NULL; NULL and NaN
+    distances match nothing), the dwithin kernel of both routes.
+    Vectorized fast path for 2-vertex segments / points on BOTH sides (the
+    trajectory-join candidate shape — round 5: the per-row parse+distance
+    loop was the sf1 scale cliff in cpa_join's prefilter); unrecognized
+    layouts fall back to the exact scalar kernel row by row."""
+    a4, arec = wkb.decode_seg4(abuf)
+    b4, brec = wkb.decode_seg4(bbuf)
+    fast = arec & brec & ~np.isnan(dd)
+    out = np.zeros(len(abuf), dtype=bool)
+    ii = np.nonzero(fast)[0]
+    if len(ii):
+        out[ii] = algos.seg_seg_distance(a4[ii], b4[ii]) <= dd[ii]
+    for i in np.nonzero(~fast)[0]:
+        x, y, t = abuf[i], bbuf[i], dd[i]
+        out[i] = (False if (x is None or y is None or t != t)
+                  else algos.dwithin(wkb.parse(x), wkb.parse(y), float(t)))
+    return out
+
+
+def _refine_udf(predicate: str):
     """Exact-predicate refine over candidate pairs.
 
     Receives (left_wkb, right_wkb[, dist]) per candidate. Point×polygon
@@ -347,27 +342,10 @@ def _refine_udf(predicate: str, distance_expr_is_col: bool):
 
         @F.pandas_udf(BooleanType())
         def refine(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
-            # vectorized fast path for 2-vertex segments / points on BOTH
-            # sides (the trajectory-join candidate shape — round 5: the
-            # per-row parse+distance loop was the sf1 scale cliff in
-            # cpa_join's prefilter); unrecognized layouts fall back to the
-            # exact scalar kernel row by row
-            abuf = [None if x is None else bytes(x) for x in a]
-            bbuf = [None if y is None else bytes(y) for y in b]
-            dd = d.to_numpy(np.float64, na_value=np.nan)
-            a4, arec = wkb.decode_seg4(abuf)
-            b4, brec = wkb.decode_seg4(bbuf)
-            fast = arec & brec & ~np.isnan(dd)
-            out = np.zeros(len(abuf), dtype=bool)
-            ii = np.nonzero(fast)[0]
-            if len(ii):
-                out[ii] = algos.seg_seg_distance(a4[ii], b4[ii]) <= dd[ii]
-            for i in np.nonzero(~fast)[0]:
-                x, y, t = abuf[i], bbuf[i], dd[i]
-                out[i] = (False if (x is None or y is None or t != t)
-                          else algos.dwithin(wkb.parse(x), wkb.parse(y),
-                                             float(t)))
-            return pd.Series(out)
+            return pd.Series(_dwithin_pairs(
+                [None if x is None else bytes(x) for x in a],
+                [None if y is None else bytes(y) for y in b],
+                d.to_numpy(np.float64, na_value=np.nan)))
 
         return refine
 
@@ -436,16 +414,23 @@ def _point_in_polygon_refine_udf(predicate: str):
 
 
 class _ProbeIndex:
-    """Columnar cell index over the build rows of a broadcast relation join
+    """Columnar cell index over the build rows of a broadcast join
     (*Columnar Formatted Inverted Index*, ICDE 2025): ``keys``, the cells of
     every build envelope, sorted; ``ords[k]``, the build row under
     ``keys[k]``. Built on the driver, broadcast with the build WKB and
-    ``_rid``s; a worker parses each build geometry once (``geom``). The
-    grid level, unless given, fits the build envelopes."""
+    ``_rid``s; a worker parses each build geometry once (``geom``). For
+    ``dwithin`` (``dist``) every envelope grows by its row's distance plus
+    a rounding slack, and a NULL or NaN distance covers nothing. The grid
+    level, unless given, fits the (expanded) build envelopes."""
 
-    def __init__(self, bufs, rids: np.ndarray, grid_level: Optional[int]):
+    def __init__(self, bufs, rids: np.ndarray, grid_level: Optional[int],
+                 dist: Optional[np.ndarray] = None):
         arr = pa.array(bufs, pa.binary())
-        self.bufs, self.rids, self.env = arr.to_pylist(), rids, _xy_env(arr)[2]
+        self.bufs, self.rids, self.dist = arr.to_pylist(), rids, dist
+        self.x, self.y, self.env, _ = wkb.xy_env(arr)
+        if dist is not None:
+            pad = dist + 2.0 ** -40 * (np.abs(self.env).max(axis=1) + np.abs(dist))
+            self.env = self.env + pad[:, None] * np.array([-1.0, -1.0, 1.0, 1.0])
         if grid_level is None:
             e = self.env[~np.isnan(self.env[:, 0])]
             grid_level = pick_level_for_envelopes(e[:, 2] - e[:, 0], e[:, 3] - e[:, 1])
@@ -483,8 +468,10 @@ class _ProbeIndex:
         """(probe row, build row) pairs of a batch of left WKB satisfying
         ``left PREDICATE build``: points against polygons by one vectorised
         point-in-polygon per build row, other pairs by the exact predicate."""
-        x, y, env, geoms = _xy_env(arr)
+        x, y, env, geoms = wkb.xy_env(arr)
         i, j = self.candidates(env)
+        if predicate == "dwithin":
+            return self._dwithin(arr, x, y, i, j)
         pip = (predicate in _PIP_PREDS) & np.isin(self.kinds[j], list(_AREAL_KINDS)) & ~np.isnan(x[i])
         ok = np.zeros(len(i), dtype=bool)
         grp = np.nonzero(pip)[0][np.argsort(j[pip], kind="stable")]
@@ -494,24 +481,43 @@ class _ProbeIndex:
                 ok[g] = _pip_keep(predicate, loc)
         fn = RELATION_FNS[predicate]
         for k in np.nonzero(~pip)[0]:
-            a = geoms[i[k]]
+            a = geoms.get(i[k])
             a = wkb.point(x[i[k]], y[i[k]]) if a is None else a
             ok[k] = bool(fn(a, self.geom(j[k])))
+        return i[ok], j[ok]
+
+    def _dwithin(self, arr: pa.Array, x, y, i, j):
+        """Point x point pairs by the cell join's column refine,
+        ``sqrt(dx*dx + dy*dy) <= d`` on the decoded x/y (NaN never
+        matches); every other pair by the dwithin kernel."""
+        d = self.dist[j]
+        pp = ~np.isnan(x[i]) & ~np.isnan(self.x[j])
+        dx, dy = x[i] - self.x[j], y[i] - self.y[j]
+        with np.errstate(invalid="ignore"):
+            ok = pp & (np.sqrt(dx * dx + dy * dy) <= d) & ~np.isnan(d)
+        k = np.nonzero(~pp)[0]
+        if len(k):
+            ok[k] = _dwithin_pairs(arr.take(pa.array(i[k], pa.int64())).to_pylist(),
+                                   [self.bufs[t] for t in j[k]], d[k])
         return i[ok], j[ok]
 
 
 def _broadcast_probe(L: DataFrame, R: DataFrame, lgeom: str, rgeom: str, predicate: str,
                      how: str, grid_level: Optional[int], est_bytes) -> DataFrame:
-    """Relation join against a broadcast right side (module docstring,
-    BROADCAST PROBE)."""
+    """Join against a broadcast right side (module docstring, BROADCAST
+    PROBE); a ``dwithin`` right side carries its distance in ``_dist``."""
     semi = {"left_semi": True, "semi": True, "left_anti": False, "anti": False}.get(how)
     outer_l = how in ("left", "full", "outer", "full_outer")
     outer_r = how in ("right", "full", "outer", "full_outer")
     if semi is None and how not in ("inner", "left") and not outer_r:
         raise ValueError(f"unsupported how={how!r}")
-    # _rid hashes the whole right row: equal ids, equal geometry
-    rows = dict(R.select("_rid", rgeom).collect())
-    index = _ProbeIndex(list(rows.values()), np.fromiter(rows, np.int64, len(rows)), grid_level)
+    # _rid hashes the whole right row: equal ids, equal geometry and distance
+    dwithin = predicate == "dwithin"
+    cols = ["_rid", rgeom] + (["_dist"] if dwithin else [])
+    rows = {r[0]: r[1:] for r in R.select(*cols).collect()}
+    dist = np.array([r[1] for r in rows.values()], np.float64) if dwithin else None  # NULL: NaN
+    index = _ProbeIndex([r[0] for r in rows.values()], np.fromiter(rows, np.int64, len(rows)),
+                        grid_level, dist)
     _log_route("broadcast_probe", est_bytes, len(rows), set(index.kinds.tolist()),
                index.grid.level)
     bc = L.sparkSession.sparkContext.broadcast(index)
@@ -535,7 +541,7 @@ def _broadcast_probe(L: DataFrame, R: DataFrame, lgeom: str, rgeom: str, predica
     out_l = [F.col(c).alias(c[3:]) for c in L.columns]
     if semi is not None:
         return out.select(*out_l)
-    out_r = [F.col(c).alias(c[3:]) for c in R.columns if c != "_rid"]
+    out_r = [F.col(c).alias(c[3:]) for c in R.columns if c not in ("_rid", "_dist")]
     res = out.join(F.broadcast(R), "_rid", "left" if outer_l else "inner").select(*out_l, *out_r)
     if outer_r:
         null_l = [F.lit(None).cast(f.dataType).alias(f.name[3:]) for f in L.schema.fields]
@@ -677,7 +683,7 @@ def spatial_join(
             broadcast_right = est <= BROADCAST_BYTES_CAP
         except Exception:
             broadcast_right = False
-    if broadcast_right and dist_col is None and left_xy is None:
+    if broadcast_right and left_xy is None:
         return _broadcast_probe(L, R, lgeom, rgeom, predicate, how, grid_level, est)
 
     L = L.withColumn("_lid", _wide_id(1, [F.col(f"_l_{c}") for c in lcols]))
@@ -694,7 +700,7 @@ def spatial_join(
 
     # --- stats + grid level -------------------------------------------------
     if grid_level is None:
-        env = _xy_env(pa.array([r[0] for r in _rsample_rows], pa.binary()))[2]
+        env = wkb.xy_env([r[0] for r in _rsample_rows])[2]
         env = env[~np.isnan(env[:, 0])]
         widths, heights = env[:, 2] - env[:, 0], env[:, 3] - env[:, 1]
         if dist_col is not None:
@@ -702,7 +708,7 @@ def spatial_join(
             # grid for the expanded envelope or point sides explode to
             # millions of cells (analogue of expand_rect_in_place,
             # rust/sedona-spatial-join/src/operand_evaluator.rs:307)
-            dsample = [float(r[1]) for r in _rsample_rows if r[1] is not None]
+            dsample = [float(r[1]) for r in _rsample_rows if r[1] is not None and r[1] == r[1]]
             dmed = float(np.median(dsample)) if dsample else 0.0
             widths = (widths if len(widths) else np.zeros(1)) + 2.0 * dmed
             heights = (heights if len(heights) else np.zeros(1)) + 2.0 * dmed
@@ -859,10 +865,10 @@ def spatial_join(
         cand = cand.withColumn(
             "_ok", (F.sqrt(dx * dx + dy * dy) <= d) & ~F.isnan(d))
     elif predicate == "dwithin":
-        refine = _refine_udf("dwithin", True)
+        refine = _refine_udf("dwithin")
         cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom), F.col(dist_col)))
     else:
-        refine = _refine_udf(predicate, False)
+        refine = _refine_udf(predicate)
         cand = cand.withColumn("_ok", refine(F.col(lgeom), F.col(rgeom)))
 
     matched = cand.where(F.col("_ok"))

@@ -126,22 +126,28 @@ class Grid:
         return self.pack(np.where(ok, nix, 0), np.where(ok, niy, 0)), ok
 
 
+_SPREAD8 = [sum(((v >> b) & 1) << (2 * b) for b in range(8)) for v in range(256)]
+
+
 def cell_expr(grid: "Grid", x_col, y_col):
     """Pure-Spark (whole-stage-codegen) point -> cell_id expression.
 
     The same morton interleave as `Grid.pack`, written as Column bit math —
     when x/y exist as plain columns (e.g. the pages table's lon/lat), cell
-    assignment costs ZERO python and fuses into the scan stage."""
+    assignment costs ZERO python and fuses into the scan stage. Bits are
+    spread by a 256-entry table, one lookup per 8 bits of the level, so
+    each clamped cell index appears at most 4 times and an array of many
+    levels still compiles."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
+    lut = F.array(*[F.lit(v) for v in _SPREAD8]).cast("array<bigint>")
+
     def spread(c):
-        c = c.bitwiseAND(F.lit(0x3FFFFFF))
-        c = (c.bitwiseOR(F.shiftleft(c, 16))).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        c = (c.bitwiseOR(F.shiftleft(c, 8))).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        c = (c.bitwiseOR(F.shiftleft(c, 4))).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        c = (c.bitwiseOR(F.shiftleft(c, 2))).bitwiseAND(F.lit(0x3333333333333333))
-        c = (c.bitwiseOR(F.shiftleft(c, 1))).bitwiseAND(F.lit(0x5555555555555555))
-        return c
+        return reduce(lambda a, b: a.bitwiseOR(b), [
+            F.shiftleft(lut[F.shiftright(c, 8 * k).bitwiseAND(F.lit(0xFF)).cast("int")], 16 * k)
+            for k in range(max(1, (grid.level + 7) // 8))])
 
     x0, y0 = grid.bounds[0], grid.bounds[1]
     ix = F.floor((x_col - F.lit(x0)) / F.lit(grid.cw)).cast("long")

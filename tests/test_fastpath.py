@@ -190,8 +190,9 @@ def test_route_record_of_perfbench_shaped_join(spark, caplog):
     rng = np.random.default_rng(12)
     x, y = rng.uniform(0, 100, 300), rng.uniform(0, 100, 300)
     pts = spark.createDataFrame(
-        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(x, y))],
-        "pid LONG, geom BINARY")
+        [(int(i), float(a), float(b), bytes(w))
+         for i, (a, b, w) in enumerate(zip(x, y, wkb.encode_points_xy(x, y)))],
+        "pid LONG, x DOUBLE, y DOUBLE, geom BINARY")
     polys = []
     for k in range(25):  # irregular 60-vertex stars, as in the benchmark
         cx, cy = 20.0 * (k % 5) + 10.0, 20.0 * (k // 5) + 10.0
@@ -202,10 +203,118 @@ def test_route_record_of_perfbench_shaped_join(spark, caplog):
     right = spark.createDataFrame(polys, "rid INT, geom BINARY")
     with caplog.at_level("INFO", logger="sedona_db_spark.plan"):
         spatial_join(pts, right, predicate="within", left_geom="geom", right_geom="geom")
+        # a broadcast dwithin takes the probe route unless left_xy is given
         spatial_join(pts, pts, predicate="dwithin", distance=1.0, left_geom="geom",
-                     right_geom="geom", grid_level=7)
+                     right_geom="geom", grid_level=7, left_xy=("x", "y"))
     probe, cell = [r.plan for r in caplog.records if r.name == "sedona_db_spark.plan"]
     assert probe == {"route": "broadcast_probe", "est_bytes": 25 * (len(polys[0][1]) + 64.0),
                      "build_rows": 25, "right_kinds": ["areal"], "grid_level": 4}
     assert cell["route"] == "cell_join" and cell["grid_level"] == 7
     assert cell["right_kinds"] == ["point"] and cell["build_rows"] == 300
+
+
+def test_cell_expr_compiles_at_six_levels(spark):
+    """An array of ``cell_expr`` at six levels over computed x/y compiles
+    with codegen fallback off (each level references the clamped cell
+    index at most 4 times) and equals ``Grid.pack``."""
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        cx = F.lit(-180.0) + ((F.col("id") * 7) % 3600) * F.lit(0.1) + F.lit(0.005)
+        cy = F.lit(-90.0) + ((F.col("id") * 13) % 1800) * F.lit(0.1) + F.lit(0.005)
+        levels = [2, 5, 8, 9, 16, 24]
+        pts = spark.range(300).select("id", cx.alias("x"), cy.alias("y"))
+        rows = pts.select("id", F.posexplode(F.array(
+            *[cell_expr(Grid(lv), F.col("x"), F.col("y")) for lv in levels]))).collect()
+    finally:
+        spark.conf.set(key, old)
+    got = {(r["id"], r["pos"]): r["col"] for r in rows}
+    ids = np.arange(300)
+    x = -180.0 + ((ids * 7) % 3600) * 0.1 + 0.005
+    y = -90.0 + ((ids * 13) % 1800) * 0.1 + 0.005
+    for k, lv in enumerate(levels):
+        want = Grid(lv).cell_of_points(x, y)
+        assert [got[(i, k)] for i in ids] == [int(v) for v in want], f"level {lv}"
+
+
+def _knn_dwithin_sides(spark, n_probe=300, n_build=100):
+    """Point probe and build sides shaped like the ``sql_knn_dwithin``
+    benchmark (uniform points, a fixed id column each)."""
+    rng = np.random.default_rng(13)
+    x, y = rng.uniform(0, 100, n_probe), rng.uniform(0, 100, n_probe)
+    bx, by = rng.uniform(0, 100, n_build), rng.uniform(0, 100, n_build)
+    probe = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(x, y))],
+        "cid LONG, geom BINARY")
+    build = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(bx, by))],
+        "sid LONG, geom BINARY")
+    return probe, build
+
+
+def test_route_record_of_knn_and_dwithin_joins(spark, caplog):
+    """Broadcast DWithin logs the probe route with its grid level (picked
+    from the build envelopes expanded by the distance) and kinds; each
+    ``knn_join`` logs its route, build rows, build mode and ``k_eff`` (the
+    grid route's record is pinned in ``test_knn_join.py``)."""
+    from sedona_db_spark.tiling import pick_level_for_envelopes
+
+    probe, build = _knn_dwithin_sides(spark)
+    with caplog.at_level("INFO", logger="sedona_db_spark.plan"):
+        spatial_join(probe, build, predicate="dwithin", distance=2.0, left_geom="geom",
+                     right_geom="geom")
+        knn_join(probe, build, k=5, probe_geom="geom", build_geom="geom")
+    dw, bc = [r.plan for r in caplog.records if r.name == "sedona_db_spark.plan"]
+    assert dw == {"route": "broadcast_probe", "est_bytes": 100 * (21 + 64.0),
+                  "build_rows": 100, "right_kinds": ["point"],
+                  "grid_level": pick_level_for_envelopes(np.full(1, 4.0), np.full(1, 4.0))}
+    assert bc == {"route": "broadcast", "build_rows": 100, "build_mode": "point", "k_eff": 5}
+
+
+def _group_jobs(spark, group, fn):
+    """(result of ``fn()``, the stage ids of each Spark job it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    return out, [list(st.getJobInfo(j).stageIds) for j in sorted(st.getJobIdsForGroup(group))]
+
+
+def test_broadcast_knn_and_dwithin_plan_shape(spark):
+    """Broadcast DWithin and broadcast kNN run one Python pass and no
+    Generate; the kNN plan has no Window or Aggregate, and planning it
+    launches at most the probe sample and the capped build collect."""
+    probe, build = _knn_dwithin_sides(spark, n_probe=4000)
+    dw = spatial_join(probe, build, predicate="dwithin", distance=2.0, left_geom="geom",
+                      right_geom="geom")
+    knn, jobs = _group_jobs(spark, "knn-planning-jobs", lambda: knn_join(
+        probe, build, k=5, probe_geom="geom", build_geom="geom"))
+    assert len(jobs) <= 2, jobs
+    for df, name in ((dw, "probe"), (knn, "solve")):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert _python_calls(plan) == [name] and "Generate" not in plan, plan
+    plan = knn._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "Aggregate" not in plan, plan
+
+
+def test_small_knn_build_runs_no_wide_shuffle(spark):
+    """A 10-row build at the default shuffle partition count: no stage of
+    planning or running the kNN join spans the 200 shuffle partitions (the
+    build ids' window used to shuffle the build side on them)."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        probe, build = _knn_dwithin_sides(spark, n_probe=50, n_build=10)
+        rows, jobs = _group_jobs(spark, "knn-small-build", lambda: knn_join(
+            probe, build, k=3, probe_geom="geom", build_geom="geom").collect())
+    finally:
+        spark.conf.set(key, old)
+    assert len(rows) == 50 * 3
+    st = spark.sparkContext.statusTracker()
+    tasks = [st.getStageInfo(s).numTasks for ss in jobs for s in ss if st.getStageInfo(s)]
+    assert tasks and max(tasks) < 200, (jobs, tasks)

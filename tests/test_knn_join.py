@@ -439,3 +439,96 @@ def test_point_knn_prune_equals_bruteforce_topk(spark, kind):
         got = knn_join(P, B, k=k, build_id="bid", use_spheroid=spheroid).select(
             "pid", "bid", "knn_distance", "knn_rank").collect()
         assert sorted(tuple(r) for r in got) == sorted(want), k
+
+
+def _route_rows(res):
+    return sorted((r["pid"], r["bid"], r["knn_rank"], round(r["knn_distance"], 9))
+                  for r in res.select("pid", "bid", "knn_rank", "knn_distance").collect())
+
+
+def test_broadcast_knn_duplicates_nulls_empties_match_grid_and_bruteforce(spark, caplog):
+    """Each build row is its own entry: two identical build rows both come
+    back, ranked 1 and 2; identical probe rows each get their k; NULL and
+    EMPTY rows on either side match nothing. Both routes agree with a brute
+    force."""
+    probe_rows, px, py = make_points(30, 21)
+    build_rows, bx, by = make_points(40, 22)
+    empty = wkb.encode(wkb.from_wkt("POINT EMPTY"))
+    be_empty = b"\x00\x00\x00\x00\x01" + b"\x7f\xf8" + b"\x00" * 6 + b"\x7f\xf8" + b"\x00" * 6
+    probe_rows += [(30, None), (31, empty), (32, be_empty), probe_rows[3], probe_rows[3]]
+    build_rows += [(40, None), (41, empty), (42, be_empty), build_rows[7]]
+    P = spark.createDataFrame(probe_rows, SCHEMA).withColumnRenamed("id", "pid")
+    B = spark.createDataFrame(build_rows, SCHEMA).withColumnRenamed("id", "bid")
+    want = []
+    bxd, byd = np.append(bx, bx[7]), np.append(by, by[7])
+    bids = np.append(np.arange(40), 7)
+    for pid, x, y in list(zip(range(30), px, py)) + [(3, px[3], py[3])] * 2:
+        d = np.sqrt((bxd - x) ** 2 + (byd - y) ** 2)
+        order = np.lexsort((bids, d))[:4]
+        want += [(pid, int(bids[j]), r + 1, round(float(d[j]), 9)) for r, j in enumerate(order)]
+    near7 = [w for w in want if w[0] != 3 and w[1] == 7]
+    assert any(a[:2] == b[:2] and (a[2], b[2]) == (r, r + 1)
+               for a, b in zip(near7, near7[1:]) for r in (1, 2, 3))  # both copies ranked
+    for bt, route in ((200_000, "broadcast"), (0, "grid")):
+        caplog.clear()
+        with caplog.at_level("INFO", logger="sedona_db_spark.plan"):
+            res = knn_join(P, B, k=4, build_id="bid", grid_level=4, broadcast_threshold=bt)
+        assert [r.plan for r in caplog.records if r.name == "sedona_db_spark.plan"] == [
+            {"route": route, "build_rows": 44, "build_mode": "point", "k_eff": 4}]
+        assert _route_rows(res) == sorted(want), f"bt={bt}"
+
+
+def test_broadcast_knn_distance_ties_match_grid(spark):
+    """Twelve build points at distance exactly 5: without ``build_id`` the
+    routes break ties by the same content key (same rows), with it by the
+    id, and ``include_ties`` returns every tied row at rank 1."""
+    ring = [(3, 4), (4, 3), (5, 0), (0, 5), (-3, 4), (-4, 3), (-5, 0), (0, -5),
+            (3, -4), (4, -3), (-3, -4), (-4, -3)]
+    xy = np.array(ring + [(6, 6), (9, 1), (-7, 2)], dtype=float) + 50.0
+    B = spark.createDataFrame(
+        [(int(i), bytes(w)) for i, w in enumerate(wkb.encode_points_xy(xy[:, 0], xy[:, 1]))],
+        SCHEMA).withColumnRenamed("id", "bid")
+    P = spark.createDataFrame(
+        [(0, bytes(wkb.encode_points_xy(np.array([50.0]), np.array([50.0]))[0]))],
+        SCHEMA).withColumnRenamed("id", "pid")
+    for kw in (dict(), dict(build_id="bid"), dict(include_ties=True)):
+        got = [_route_rows(knn_join(P, B, k=5, grid_level=4, broadcast_threshold=bt, **kw))
+               for bt in (200_000, 0)]
+        assert got[0] == got[1], kw
+        if kw.get("include_ties"):
+            assert got[0] == [(0, b, 1, 5.0) for b in range(12)]
+        else:
+            assert sorted(r[2:] for r in got[0]) == [(1 + i, 5.0) for i in range(5)]
+            assert {r[1] for r in got[0]} <= set(range(12))
+        if "build_id" in kw:
+            assert sorted(r[1:3] for r in got[0]) == [(b, b + 1) for b in range(5)]
+
+
+def test_knn_build_columns_of_every_type_come_back_unchanged(spark):
+    """The broadcast route appends the collected build columns to each
+    match; every Spark type comes back as it went in, on both routes."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import functions as F
+
+    probe_rows, _, _ = make_points(20, 31)
+    build_pts, _, _ = make_points(12, 32)
+    rows = [(i, g, datetime.datetime(2021, 3, 1 + i, i, 30, 15, 250), datetime.date(2020, 2, 1 + i),
+             decimal.Decimal(f"{i}.{i:02d}"), [i, None, -i], (i, f"s{i}", [1.5 * i]),
+             {f"k{i}": i, "z": None}, None)
+            for i, g in build_pts]
+    B = spark.createDataFrame(rows, "bid LONG, geometry BINARY, ts TIMESTAMP, d DATE, "
+                              "dec DECIMAL(12,2), arr ARRAY<INT>, "
+                              "st STRUCT<a: LONG, b: STRING, c: ARRAY<DOUBLE>>, "
+                              "m MAP<STRING, INT>, nul STRING").withColumn("void", F.lit(None))
+    P = spark.createDataFrame(probe_rows, SCHEMA).withColumnRenamed("id", "pid")
+    src = {r["bid"]: r.asDict(recursive=True) for r in B.collect()}
+    for bt in (200_000, 0):
+        res = knn_join(P, B, k=3, build_id="bid", grid_level=4, broadcast_threshold=bt)
+        assert res.schema.fields[2:-2] == B.schema.fields, bt
+        got = res.collect()
+        assert len(got) == 20 * 3
+        for r in got:
+            d = r.asDict(recursive=True)
+            assert {c: d[c] for c in B.columns} == src[r["bid"]], bt

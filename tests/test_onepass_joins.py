@@ -7,8 +7,8 @@ per-pair WKB refiner, or a brute-force kNN — on the inputs a decode can
 get wrong: NULL geometries, POINT EMPTY (NaN coordinates), big-endian and
 EWKB points, NaN and boundary-exact DWithin distances, and a non-point
 probe row past the planner's sample. The broadcast probe of relation
-joins is checked against a pairwise brute force under every predicate and
-join type."""
+and dwithin joins is checked against a pairwise brute force under every
+predicate, distance kind and join type."""
 
 import struct
 
@@ -356,3 +356,97 @@ def test_cell_join_matches_bruteforce_on_probe_inputs(probe_sides):
     join's rows hold the inner, left and right joins' rows."""
     lrows, rrows, left, right = probe_sides
     assert _every_predicate(left, right, "full", False) == _bruteforce(lrows, rrows, "full")
+
+
+# --- the broadcast probe for dwithin: literal and column distances ----------
+
+def _dwithin_left_rows():
+    """LE points, NULL, POINT EMPTY in three encodings, BE and EWKB points,
+    points at exactly the distance (3-4-5 triangles), XY and XYM 2-vertex
+    segments, a LINESTRING and a POLYGON at the tail."""
+    rng = np.random.default_rng(10)
+    x, y = rng.uniform(0, 40, 30), rng.uniform(0, 40, 30)
+    geoms = [bytes(w) for w in wkb.encode_points_xy(x, y)]
+    geoms += [None, EMPTY, _be_empty(), _ewkb_empty(), _be(13.0, 14.0), _ewkb(10.0, 15.0)]
+    geoms += [bytes(w) for w in wkb.encode_points_xy(np.array([5.0, 10.0, 30.0, 20.0]),
+                                                     np.array([10.0, 10.0, 34.0, 20.0]))]
+    geoms += [wkb.encode(wkb.from_wkt(t)) for t in (
+        "LINESTRING (0 0, 4 3)", "LINESTRING M (20 24 1, 24 27 5)", "LINESTRING (1 30, 8 30, 8 39)",
+        "POLYGON ((30 0, 40 0, 40 8, 30 8, 30 0))")]
+    return list(enumerate(geoms))
+
+
+def _dwithin_right_rows():
+    """(tid, geom, d): points (one exactly 5 from left points), a segment,
+    a polygon, a NULL geometry, two identical rows; distances 5, 2, NULL,
+    NaN and 0."""
+    pt = lambda x, y: bytes(wkb.encode_points_xy(np.array([x]), np.array([y]))[0])  # noqa: E731
+    nan = float("nan")
+    return [(0, pt(10.0, 10.0), 5.0), (1, pt(30.0, 30.0), 4.0), (2, pt(20.0, 20.0), 0.0),
+            (3, pt(25.0, 5.0), None), (4, pt(5.0, 25.0), nan),
+            (5, wkb.encode(wkb.from_wkt("LINESTRING (12 30, 18 36)")), 2.0),
+            (6, wkb.encode(wkb.from_wkt("POLYGON ((22 8, 28 8, 25 14, 22 8))")), 3.0),
+            (7, None, 5.0), (8, pt(35.0, 20.0), 2.5), (8, pt(35.0, 20.0), 2.5)]
+
+
+def _dwithin_bruteforce(lrows, rrows, how):
+    """Every (distance kind, pid, tid) row: the literal distance 5 and the
+    column ``d``, from ``algos.dwithin`` over every pair (NULL, EMPTY and a
+    NULL or NaN distance match nothing)."""
+    from sedona_db_spark.geometry import algos
+
+    def live(b):
+        return None if b is None or wkb.parse(b).is_empty else wkb.parse(b)
+
+    L = [(p, live(b)) for p, b in lrows]
+    R = [(t, live(b), d) for t, b, d in rrows]
+    out = []
+    for kind in ("col", "lit"):
+        pairs = [(li, ri) for li, (_, a) in enumerate(L) for ri, (_, b, d) in enumerate(R)
+                 for dd in [5.0 if kind == "lit" else d]
+                 if a is not None and b is not None and dd is not None and dd == dd
+                 and algos.dwithin(a, b, dd)]
+        hit_l, hit_r = {li for li, _ in pairs}, {ri for _, ri in pairs}
+        inner = [(L[li][0], R[ri][0]) for li, ri in pairs]
+        l_miss = [(p, None) for li, (p, _) in enumerate(L) if li not in hit_l]
+        r_miss = [(None, t) for ri, (t, _, _) in enumerate(R) if ri not in hit_r]
+        rows = {"inner": inner, "left": inner + l_miss, "right": inner + r_miss,
+                "full": inner + l_miss + r_miss, "left_anti": l_miss,
+                "left_semi": [(p, None) for li, (p, _) in enumerate(L) if li in hit_l]}[how]
+        out += [(kind, p, t) for p, t in rows]
+    return sorted(out, key=lambda r: tuple((v is None, v) for v in r))
+
+
+def _both_distances(left, right, how, bcast):
+    from pyspark.sql import functions as F
+
+    parts = []
+    for kind, dist in (("col", right["d"]), ("lit", 5.0)):
+        j = spatial_join(left, right, predicate="dwithin", distance=dist, left_geom="geom",
+                         right_geom="geom", how=how, broadcast_right=bcast)
+        tid = F.col("tid") if "tid" in j.columns else F.lit(None).cast("int")
+        parts.append(j.select(F.lit(kind).alias("kind"), "pid", tid.alias("tid")))
+    return _rows(parts[0].union(parts[1]), "kind", "pid", "tid")
+
+
+@pytest.fixture(scope="module")
+def dwithin_sides(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    lrows, rrows = _dwithin_left_rows(), _dwithin_right_rows()
+    yield (lrows, rrows, spark.createDataFrame(lrows, "pid LONG, geom BINARY"),
+           spark.createDataFrame(rrows, "tid INT, geom BINARY, d DOUBLE"))
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("how", _HOWS)
+def test_broadcast_probe_dwithin_matches_bruteforce(dwithin_sides, how):
+    lrows, rrows, left, right = dwithin_sides
+    want = _dwithin_bruteforce(lrows, rrows, how)
+    assert _both_distances(left, right, how, True) == want
+    if how == "full":  # the cell join on the same inputs
+        assert _both_distances(left, right, how, False) == want
+    if how == "inner":  # the exact-distance and odd-encoding rows really matched
+        assert {("col", 36, 0), ("col", 37, 0), ("col", 34, 0), ("col", 38, 1),
+                ("col", 39, 2), ("lit", 35, 0)} <= set(want)

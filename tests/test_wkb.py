@@ -176,3 +176,73 @@ def test_shape_kinds_matches_parse_reference():
     assert want[:10] == [wkb.KIND_NULL] + [wkb.KIND_POINT] * 9
     assert want[10:14] == [wkb.KIND_RECT, wkb.KIND_RECT, wkb.KIND_AREAL, wkb.KIND_AREAL]
     assert set(want[17:]) == {wkb.KIND_OTHER}
+
+
+def _decode_points_loop(bufs):
+    """The per-row point decoder ``decode_points_xy`` replaced: the
+    reference for its ``(x, y, valid)`` contract."""
+    n = len(bufs)
+    x, y, valid = np.full(n, np.nan), np.full(n, np.nan), np.zeros(n, dtype=bool)
+    for i, b in enumerate(bufs):
+        if b is None:
+            continue
+        b = bytes(b)
+        if len(b) == 21 and b[:5] == b"\x01\x01\x00\x00\x00":
+            x[i], y[i] = struct.unpack("<dd", b[5:])
+            valid[i] = True
+            continue
+        g = wkb.parse(b)
+        if g.type_id == wkb.POINT and len(g.coords):
+            x[i], y[i], valid[i] = g.coords[0, 0], g.coords[0, 1], True
+    return x, y, valid
+
+
+def test_decode_points_xy_matches_loop_reference():
+    import pyarrow as pa
+
+    nan = float("nan")
+
+    def be(*xy):
+        return b"\x00" + struct.pack(">I", 1) + struct.pack(">%dd" % len(xy), *xy)
+
+    def ewkb(flags, *xy, srid=None):
+        head = struct.pack("<I", 1 | flags) + (struct.pack("<I", srid) if srid else b"")
+        return b"\x01" + head + struct.pack("<%dd" % len(xy), *xy)
+
+    rng = np.random.default_rng(4)
+    bufs = [bytes(b) for b in wkb.encode_points_xy(rng.uniform(-9, 9, 7), rng.uniform(-9, 9, 7))]
+    bufs[2:2] = [
+        None,
+        wkb.encode(wkb.from_wkt("POINT EMPTY")),          # LE EMPTY: valid, NaN
+        be(3.0, 4.0), be(nan, nan),                       # BE and its EMPTY
+        ewkb(0x20000000, 1.0, 2.0, srid=4326),            # EWKB SRID
+        ewkb(0x20000000, nan, nan, srid=4326),            # EWKB EMPTY
+        ewkb(0x80000000, 1.0, 2.0, 3.0),                  # EWKB Z
+        wkb.encode(wkb.from_wkt("POINT Z (5 6 7)")),      # ISO Z, M and ZM
+        wkb.encode(wkb.from_wkt("POINT M (5 6 8)")),
+        wkb.encode(wkb.from_wkt("POINT ZM (1 2 3 4)")),
+        b"\x00" + struct.pack(">I", 2) + struct.pack(">I", 0) + b"\x00" * 12,  # 21 B, BE LINESTRING EMPTY
+        b"\x01" + struct.pack("<I", 2) + struct.pack("<I", 0) + b"\x00" * 12,  # 21 B, LE, not a point
+        bytearray(wkb.encode(wkb.point(-1.5, 2.5))),      # Spark hands bytearray
+        wkb.encode(wkb.box(0, 0, 2, 1)),
+        wkb.encode(wkb.from_wkt("POLYGON ((0 0, 2 0, 2 1, 1 2, 0 0))")),
+        wkb.encode(wkb.from_wkt("MULTIPOINT ((1 1), (2 2))")),
+    ]
+    want = _decode_points_loop(bufs)
+    assert want[2].sum() == 15 and np.isnan(want[0][3])  # 8 LE rows, 7 other points
+
+    def same(got, ref):
+        for g, w in zip(got, ref):
+            np.testing.assert_array_equal(g, w)
+
+    arr = pa.array(bufs, pa.binary())
+    same(wkb.decode_points_xy(bufs), want)
+    same(wkb.decode_points_xy(np.array(bufs, dtype=object)), want)
+    same(wkb.decode_points_xy(arr), want)
+    same(wkb.decode_points_xy(arr.cast(pa.large_binary())), want)
+    for lo, hi in ((3, 20), (1, 2), (9, 9), (0, len(bufs))):  # sliced: non-zero offset
+        same(wkb.decode_points_xy(arr.slice(lo, hi - lo)), _decode_points_loop(bufs[lo:hi]))
+    # LE points back to back in the data buffer are read by a plain view
+    pts = wkb.encode_points_xy(np.arange(5.0), -np.arange(5.0))
+    same(wkb.decode_points_xy(pa.array(pts, pa.binary()).slice(1, 3)),
+         _decode_points_loop(list(pts[1:4])))
