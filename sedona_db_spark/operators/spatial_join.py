@@ -75,12 +75,13 @@ from pyspark.sql.types import (
     ByteType,
     DoubleType,
     LongType,
+    MapType,
     StructField,
     StructType,
 )
 
 from ..geometry import algos, wkb
-from ..tiling import Grid, cell_expr, pick_level_for_envelopes
+from ..tiling import WORLD, Grid, cell_expr, pick_level_for_envelopes
 from .fanout import fan_out
 
 # Byte cap for broadcasting the right side: the probe index with its build
@@ -114,6 +115,13 @@ def _wide_id(seed: int, cols):
         F.xxhash64(F.lit(seed), *cols).cast("string"),
         F.xxhash64(F.lit(seed + 1), *cols).cast("string"),
     )
+
+
+def _hashable(df: DataFrame):
+    """The columns of ``df`` as hash inputs: a map, which Spark refuses to
+    hash, as its sorted entries."""
+    return [F.array_sort(F.map_entries(F.col(f.name))) if isinstance(f.dataType, MapType)
+            else F.col(f.name) for f in df.schema.fields]
 
 
 def _estimate_bytes(df: DataFrame, geom_col: str):
@@ -413,31 +421,75 @@ def _point_in_polygon_refine_udf(predicate: str):
     return refine
 
 
-class _ProbeIndex:
-    """Columnar cell index over the build rows of a broadcast join
-    (*Columnar Formatted Inverted Index*, ICDE 2025): ``keys``, the cells of
-    every build envelope, sorted; ``ords[k]``, the build row under
-    ``keys[k]``. Built on the driver, broadcast with the build WKB and
-    ``_rid``s; a worker parses each build geometry once (``geom``). For
-    ``dwithin`` (``dist``) every envelope grows by its row's distance plus
-    a rounding slack, and a NULL or NaN distance covers nothing. The grid
-    level, unless given, fits the (expanded) build envelopes."""
+_BIG_CELLS = 4096  # an indexed envelope over more cells is scanned, not listed
+
+
+def _nonflat(x0, y0, x1, y1):
+    """Grid bounds from a box: the box, with a degenerate side widened."""
+    tiny = 2.0 ** -20 * max(x1 - x0, y1 - y0, abs(x0), abs(y0), abs(x1), abs(y1), 1.0)
+    return x0, y0, max(x1, x0 + tiny), max(y1, y0 + tiny)
+
+
+class _EnvIndex:
+    """Columnar cell index over envelopes (*Columnar Formatted Inverted
+    Index*, ICDE 2025): ``keys``, the cells every (n, 4) ``env`` covers,
+    sorted; ``ords[k]``, the envelope under ``keys[k]``; ``rids``, one id per
+    envelope. An envelope over ``_BIG_CELLS`` cells is not listed but kept
+    in ``big``, which every probe row scans. With ``dist`` every envelope
+    grows by its row's distance plus a rounding slack, and a NULL or NaN
+    distance covers nothing. The grid spans ``bounds`` (outside it, cells
+    clamp to the edge), or the (expanded) envelopes when ``bounds`` is None,
+    at ``grid_level``, or at a level fitted to those envelopes."""
+
+    def __init__(self, env: np.ndarray, rids: np.ndarray, grid_level: Optional[int],
+                 dist: Optional[np.ndarray] = None, bounds=WORLD):
+        if dist is not None:
+            pad = dist + 2.0 ** -40 * (np.abs(env).max(axis=1) + np.abs(dist))
+            env = env + pad[:, None] * np.array([-1.0, -1.0, 1.0, 1.0])
+        e = env[~np.isnan(env[:, 0])]
+        if bounds is None:
+            bounds = _nonflat(*e[:, :2].min(axis=0), *e[:, 2:].max(axis=0)) if len(e) else WORLD
+        if grid_level is None:
+            grid_level = pick_level_for_envelopes(e[:, 2] - e[:, 0], e[:, 3] - e[:, 1], bounds)
+        self.env, self.rids, self.dist, self.grid = env, rids, dist, Grid(grid_level, bounds)
+        row, cells, cnt = _env_cells(self.grid, env, cap=_BIG_CELLS)
+        order = np.argsort(cells, kind="stable")
+        self.keys, self.ords = cells[order], row[order]
+        self.big = np.nonzero(cnt > _BIG_CELLS)[0]
+
+    def candidates(self, env: np.ndarray):
+        """Deduplicated (probe row, indexed row) pairs whose envelopes
+        overlap. A probe row looks up the cells its envelope covers, or
+        scans the indexed envelopes when that touches fewer entries."""
+        nb = len(self.env)
+        row, cells, cnt = _env_cells(self.grid, env, cap=len(self.keys))
+        lo = np.searchsorted(self.keys, cells, "left")
+        hit, pos = _ranges(lo, np.searchsorted(self.keys, cells, "right") - lo)
+        big = np.nonzero(cnt > len(self.keys))[0]
+        every = np.arange(len(env))
+        i = np.concatenate([row[hit], np.repeat(big, nb), np.repeat(every, len(self.big))])
+        j = np.concatenate([self.ords[pos], np.tile(np.arange(nb), len(big)),
+                            np.tile(self.big, len(env))])
+        if (cnt > 1).any() or (len(big) and len(self.big)):  # a pair found twice
+            u = np.unique(i * nb + j)
+            i, j = u // nb, u % nb
+        b, e = self.env[j], env[i]
+        ok = (b[:, 0] <= e[:, 2]) & (b[:, 2] >= e[:, 0]) & (b[:, 1] <= e[:, 3]) & (b[:, 3] >= e[:, 1])
+        return i[ok], j[ok]
+
+
+class _ProbeIndex(_EnvIndex):
+    """``_EnvIndex`` over the build rows of a broadcast join, broadcast with
+    the build WKB and ``_rid``s; a worker parses each build geometry once
+    (``geom``)."""
 
     def __init__(self, bufs, rids: np.ndarray, grid_level: Optional[int],
                  dist: Optional[np.ndarray] = None):
         arr = pa.array(bufs, pa.binary())
-        self.bufs, self.rids, self.dist = arr.to_pylist(), rids, dist
-        self.x, self.y, self.env, _ = wkb.xy_env(arr)
-        if dist is not None:
-            pad = dist + 2.0 ** -40 * (np.abs(self.env).max(axis=1) + np.abs(dist))
-            self.env = self.env + pad[:, None] * np.array([-1.0, -1.0, 1.0, 1.0])
-        if grid_level is None:
-            e = self.env[~np.isnan(self.env[:, 0])]
-            grid_level = pick_level_for_envelopes(e[:, 2] - e[:, 0], e[:, 3] - e[:, 1])
-        self.grid, self.kinds = Grid(grid_level), wkb.shape_kinds(self.bufs)
-        row, cells, _ = _env_cells(self.grid, self.env)
-        order = np.argsort(cells, kind="stable")
-        self.keys, self.ords = cells[order], row[order]
+        self.bufs = arr.to_pylist()
+        self.x, self.y, env, _ = wkb.xy_env(arr)
+        super().__init__(env, rids, grid_level, dist)
+        self.kinds = wkb.shape_kinds(self.bufs)
         self._geoms = {}
 
     def geom(self, j: int):
@@ -445,24 +497,6 @@ class _ProbeIndex:
         if g is None:
             g = self._geoms[j] = wkb.parse(self.bufs[j])
         return g
-
-    def candidates(self, env: np.ndarray):
-        """Deduplicated (probe row, build row) pairs whose envelopes
-        overlap. A probe row looks up the cells its envelope covers, or
-        scans the build envelopes when that touches fewer entries."""
-        nb = len(self.bufs)
-        row, cells, cnt = _env_cells(self.grid, env, cap=len(self.keys))
-        lo = np.searchsorted(self.keys, cells, "left")
-        hit, pos = _ranges(lo, np.searchsorted(self.keys, cells, "right") - lo)
-        big = np.nonzero(cnt > len(self.keys))[0]
-        i = np.concatenate([row[hit], np.repeat(big, nb)])
-        j = np.concatenate([self.ords[pos], np.tile(np.arange(nb), len(big))])
-        if (cnt > 1).any():  # a build row shared by two of the row's cells
-            u = np.unique(i * nb + j)
-            i, j = u // nb, u % nb
-        b, e = self.env[j], env[i]
-        ok = (b[:, 0] <= e[:, 2]) & (b[:, 2] >= e[:, 0]) & (b[:, 1] <= e[:, 3]) & (b[:, 3] >= e[:, 1])
-        return i[ok], j[ok]
 
     def match(self, predicate: str, arr: pa.Array):
         """(probe row, build row) pairs of a batch of left WKB satisfying
@@ -664,7 +698,7 @@ def spatial_join(
         [F.col(c).alias(f"_r_{c}") for c in rcols]
         + ([F.col("__sj_dist").alias("_dist")] if "__sj_dist" in right.columns else [])
     )
-    _r_payload = [F.col(c) for c in R.columns]
+    _r_payload = _hashable(R)
     R = R.withColumn("_rid", F.xxhash64(F.lit(3), *_r_payload))
     lgeom = f"_l_{left_geom}"
     rgeom = f"_r_{right_geom}"
@@ -686,7 +720,7 @@ def spatial_join(
     if broadcast_right and left_xy is None:
         return _broadcast_probe(L, R, lgeom, rgeom, predicate, how, grid_level, est)
 
-    L = L.withColumn("_lid", _wide_id(1, [F.col(f"_l_{c}") for c in lcols]))
+    L = L.withColumn("_lid", _wide_id(1, _hashable(L)))
     R = R.withColumn("_ridw", _wide_id(5, _r_payload))
     rs_cols = [rgeom] + ([dist_col] if dist_col else [])
     if broadcast_right:
@@ -1127,8 +1161,8 @@ def _geography_join_finish(out, L, R, lcols, rcols, how: str, seed: int):
     how = how.lower()
     if how == "inner":
         return out.select(*out_l, *out_r)
-    lid = _wide_id(seed, [F.col(f"_l_{c}") for c in lcols])
-    rid = _wide_id(seed + 2, [F.col(f"_r_{c}") for c in rcols])
+    lid = _wide_id(seed, _hashable(L))
+    rid = _wide_id(seed + 2, _hashable(R))
     null_r = [F.lit(None).cast(R.schema[f"_r_{c}"].dataType).alias(c) for c in rcols]
     null_l = [F.lit(None).cast(L.schema[f"_l_{c}"].dataType).alias(c) for c in lcols]
     if how in ("left_semi", "left_anti"):

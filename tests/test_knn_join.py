@@ -1,9 +1,9 @@
-"""Grid kNN join differential tests.
+"""kNN join differential tests, broadcast and grid routes.
 
 Mirrors the reference (`python/sedonadb/tests/test_knnjoin.py:24-100`):
 |result| = |probe| * k, per-probe distances ascend, and the neighbor sets
-match a brute-force oracle exactly — including the ring-termination bound
-at cell borders (the part the reference gets free from its global R-tree)."""
+match a brute-force oracle exactly — including the grid route's bound at
+cell borders (the part the reference gets free from its global R-tree)."""
 
 import numpy as np
 import pytest
@@ -63,7 +63,8 @@ def test_knn_matches_bruteforce(spark, k, bt):
 
 def test_knn_sparse_build_forces_ring_escalation(spark):
     """Tiny build side clustered in one corner: most probes' k-th neighbor is
-    far outside the initial guard ring — exercises the escalation loop."""
+    far from their own grid cell, so their cells' bounds reach across the
+    grid to the cluster."""
     probe_rows, px, py = make_points(40, 1)
     rng = np.random.default_rng(2)
     bx = rng.uniform(0, 5, 8)
@@ -532,3 +533,192 @@ def test_knn_build_columns_of_every_type_come_back_unchanged(spark):
         for r in got:
             d = r.asDict(recursive=True)
             assert {c: d[c] for c in B.columns} == src[r["bid"]], bt
+
+
+# --- the grid route past the broadcast cap: one bounded cogroup pass ---------
+
+def _be_pt(x, y):
+    import struct
+
+    return b"\x00" + struct.pack(">I", 1) + struct.pack(">dd", x, y)
+
+
+def _ewkb_pt(x, y):
+    import struct
+
+    return b"\x01" + struct.pack("<II", 0x20000001, 4326) + struct.pack("<dd", x, y)
+
+
+_NAN = float("nan")
+_ODD = [None, wkb.encode(wkb.from_wkt("POINT EMPTY")), _be_pt(_NAN, _NAN), _ewkb_pt(_NAN, _NAN)]
+
+
+def _oracle(probe_rows, build_rows, k, spheroid=False, ties=False):
+    """Brute-force kNN rows ``(pid, bid, rank, distance)`` with the kernel's
+    rank keys — haversine meters, or the squared planar distance of the
+    build side's mode (point, rect, or general) — ties broken by ``bid``.
+    NULL and EMPTY rows match nothing."""
+    builds = [(bid, wkb.parse(g)) for bid, g in build_rows if g is not None]
+    builds = [(bid, g) for bid, g in builds if len(g.all_coords())]
+    kinds = {wkb.shape_kinds([wkb.encode(g)])[0] for _, g in builds}
+    mode = ("point" if kinds <= {wkb.KIND_POINT} else
+            "rect" if kinds <= {wkb.KIND_POINT, wkb.KIND_RECT} else "general")
+    bids = np.array([bid for bid, _ in builds])
+    out = []
+    for pid, g in probe_rows:
+        p = None if g is None else wkb.parse(g)
+        if p is None or not len(p.coords):
+            continue
+        px, py = np.array([p.coords[0, 0]]), np.array([p.coords[0, 1]])
+        key = []
+        for _, b in builds:
+            c = b.all_coords()
+            if spheroid:
+                key.append(float(algos.haversine_m(px, py, c[:1, 0], c[:1, 1])[0]))
+            elif mode == "point":
+                dx, dy = px[0] - c[0, 0], py[0] - c[0, 1]
+                key.append(dx * dx + dy * dy)
+            elif mode == "rect":
+                dx = max(c[:, 0].min() - px[0], px[0] - c[:, 0].max(), 0.0)
+                dy = max(c[:, 1].min() - py[0], py[0] - c[:, 1].max(), 0.0)
+                key.append(dx * dx + dy * dy)
+            else:
+                d = algos.points_to_geometry_distance(px, py, b)[0]
+                key.append(d * d)
+        key = np.array(key)
+        order = np.lexsort((bids, key))
+        if not len(order):
+            continue
+        kth = key[order[min(k, len(order)) - 1]]
+        for r, j in enumerate(order):
+            if (key[j] > kth) if ties else r >= k:
+                break
+            rank = int(np.sum(key < key[j])) + 1 if ties else r + 1
+            out.append((pid, int(bids[j]), rank, float(key[j] if spheroid else np.sqrt(key[j]))))
+    return sorted(out)
+
+
+def _three_way(spark, probe_rows, build_rows, k, spheroid=False, ties=False, caplog=None):
+    """The grid route's rows equal the broadcast route's and the brute force's."""
+    P = spark.createDataFrame(probe_rows, "pid LONG, geometry BINARY")
+    B = spark.createDataFrame(build_rows, "bid LONG, geometry BINARY")
+    cols = ("pid", "bid", "knn_rank", "knn_distance")
+    got = [sorted(tuple(r) for r in knn_join(
+        P, B, k=k, build_id="bid", use_spheroid=spheroid, include_ties=ties,
+        broadcast_threshold=bt).select(*cols).collect()) for bt in (0, 200_000)]
+    want = _oracle(probe_rows, build_rows, k, spheroid, ties)
+    assert got[0] == got[1]
+    assert got[0] == want
+    return want
+
+
+def test_grid_knn_projected_metres_matches_bruteforce(spark):
+    """Metre coordinates far outside lon/lat: the grid is fitted to the
+    build side (a world grid clamps every point into one edge cell)."""
+    rng = np.random.default_rng(1)
+    bx, by = rng.uniform(5e5, 6e5, 300), rng.uniform(4.0e6, 4.1e6, 300)
+    px, py = rng.uniform(5e5, 6e5, 50), rng.uniform(4.0e6, 4.1e6, 50)
+    build = [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(bx, by))]
+    probe = [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(px, py))]
+    assert len(_three_way(spark, probe, build, 3)) == 50 * 3
+
+
+def test_grid_knn_spheroid_across_the_antimeridian(spark):
+    """The nearest build point lies across ±180: 11.1 km away, against
+    50 km for the nearest one on the probe's side."""
+    build = [(i, wkb.encode(wkb.point(x, 0.0))) for i, x in
+             enumerate((-179.95, 179.0, 179.2, 179.5))]
+    probe = [(0, wkb.encode(wkb.point(179.95, 0.0)))]
+    want = _three_way(spark, probe, build, 1, spheroid=True)
+    assert [w[:3] for w in want] == [(0, 0, 1)] and abs(want[0][3] - 11119.5) < 0.1
+    # and near a pole, where a window spans every longitude
+    build += [(4, wkb.encode(wkb.point(-10.0, 89.9))), (5, wkb.encode(wkb.point(170.0, 89.95)))]
+    probe += [(1, wkb.encode(wkb.point(100.0, 89.97))), (2, wkb.encode(wkb.point(-179.99, -0.01)))]
+    _three_way(spark, probe, build, 2, spheroid=True)
+
+
+def test_grid_knn_outliers_ties_duplicates_and_odd_rows(spark):
+    """Probes far outside the build bbox, one far build outlier, exact ties
+    at the k-th distance, duplicate rows and NULL / EMPTY rows in three
+    encodings on both sides; k = 4 and k beyond the findable rows."""
+    rng = np.random.default_rng(5)
+    bxy = np.vstack([np.column_stack([rng.integers(0, 20, 60), rng.integers(0, 20, 60)]),
+                     [[1e4, -3e3]]]).astype(float)
+    pxy = np.vstack([np.column_stack([rng.integers(0, 20, 30) + 0.5, rng.integers(0, 20, 30)]),
+                     [[-5e3, 7e3], [10.0, 10.0], [2e4, -3e3]]]).astype(float)
+    build = [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(bxy[:, 0], bxy[:, 1]))]
+    probe = [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(pxy[:, 0], pxy[:, 1]))]
+    build += [build[3], build[3], (70, _be_pt(4.0, 5.0)), (71, _ewkb_pt(6.0, 5.0))]
+    build += [(80 + i, g) for i, g in enumerate(_ODD)]
+    probe += [probe[2], probe[2], (40, _be_pt(3.5, 4.0))]
+    probe += [(50 + i, g) for i, g in enumerate(_ODD)]
+    for ties in (False, True):
+        assert len(_three_way(spark, probe, build, 4, ties=ties)) >= 36 * 4
+    odd = [(0, build[0][1]), (1, build[1][1])] + [(80 + i, g) for i, g in enumerate(_ODD)]
+    assert len(_three_way(spark, probe, odd, 5)) == 36 * 2
+    # a far probe shares an edge cell with near ones: that cell's window
+    # spans millions of the window index's cells, every other one a few
+    bxy = rng.uniform(0, 100, (400, 2))
+    pxy = np.vstack([rng.uniform(0, 100, (60, 2)), [[1e7, 1e7]]])
+    build = [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(bxy[:, 0], bxy[:, 1]))]
+    probe = [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(pxy[:, 0], pxy[:, 1]))]
+    assert len(_three_way(spark, probe, build, 1)) == 61
+
+
+def test_grid_knn_rect_and_general_builds(spark):
+    """Rect and general builds: each row is counted at a corner or its
+    first vertex, which lies on it."""
+    rng = np.random.default_rng(9)
+    rects = [(i, wkb.encode(wkb.box(x, y, x + w, y + h))) for i, (x, y, w, h) in
+             enumerate(zip(rng.uniform(0, 90, 40), rng.uniform(0, 90, 40),
+                           rng.uniform(0, 9, 40), rng.uniform(0, 9, 40)))]
+    tris = []
+    for i in range(40):
+        cx, cy = rng.uniform(5, 95, 2)
+        ring = np.column_stack([cx + rng.uniform(-6, 6, 3), cy + rng.uniform(-6, 6, 3)])
+        tris.append((100 + i, wkb.encode(wkb.Geometry(wkb.POLYGON, [np.vstack([ring, ring[:1]])]))))
+    pxy = np.vstack([rng.uniform(-20, 120, (40, 2)), [[500.0, -300.0]]])
+    probe = [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(pxy[:, 0], pxy[:, 1]))]
+    _three_way(spark, probe, rects + [(99, None)], 3)
+    _three_way(spark, probe, tris + rects[:5], 3)
+
+
+def test_grid_knn_runs_one_bounded_pass(spark):
+    """The 12k x 2k, k=5 case past the cap: a fixed number of Spark jobs,
+    nothing left persisted after two calls in one session, and the
+    broadcast route's rows at any probe or shuffle partitioning."""
+    rng = np.random.default_rng(700)
+    x, y = rng.uniform(0, 100, 12_000), rng.uniform(0, 100, 12_000)
+    bx, by = rng.uniform(0, 100, 2_000), rng.uniform(0, 100, 2_000)
+    P = spark.createDataFrame([(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(x, y))],
+                              "cid LONG, geom BINARY")
+    B = spark.createDataFrame([(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(bx, by))],
+                              "sid LONG, geom BINARY")
+    kw = dict(k=5, probe_geom="geom", build_geom="geom")
+    cols = ("cid", "sid", "knn_rank", "knn_distance")
+    sc = spark.sparkContext
+
+    def persisted():  # other tests of the session may have left their own
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    for call in range(2):
+        group = f"grid-knn-jobs-{call}"
+        sc.setJobGroup(group, group)
+        try:
+            n = knn_join(P, B, broadcast_threshold=0, **kw).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert n == 12_000 * 5
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+        assert persisted() == before
+    want = sorted(tuple(r) for r in knn_join(P, B, **kw).select(*cols).collect())
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        for parts, shuffle in ((1, "2"), (7, "8")):
+            spark.conf.set(key, shuffle)
+            got = knn_join(P.repartition(parts), B, broadcast_threshold=0, **kw).select(*cols)
+            assert sorted(tuple(r) for r in got.collect()) == want, (parts, shuffle)
+    finally:
+        spark.conf.set(key, old)

@@ -450,3 +450,84 @@ def test_broadcast_probe_dwithin_matches_bruteforce(dwithin_sides, how):
     if how == "inner":  # the exact-distance and odd-encoding rows really matched
         assert {("col", 36, 0), ("col", 37, 0), ("col", 34, 0), ("col", 38, 1),
                 ("col", 39, 2), ("lit", 35, 0)} <= set(want)
+
+
+def test_map_columns_join_on_every_route(spark):
+    """A MAP column on each side (Spark refuses to hash a map): the content
+    ids of the broadcast probe and the cell join under every join type, of
+    the geography dwithin join and of the grid kNN hash it by its sorted
+    entries, and every map comes back with its row."""
+    from pyspark.sql import functions as F
+
+    from sedona_db_spark.operators.spatial_join import geography_dwithin_join
+
+    lrows, rrows = _probe_left_rows(), _probe_right_rows()
+    left = spark.createDataFrame(lrows, "pid LONG, geom BINARY").withColumn(
+        "lm", F.create_map(F.lit("p"), F.col("pid")))
+    right = spark.createDataFrame(rrows, "tid INT, geom BINARY").withColumn(
+        "rm", F.create_map(F.col("tid").cast("string"), F.lit(1.5)))
+
+    def checked(j):
+        """(pid, tid) rows of ``j``, after checking each row's maps."""
+        out = []
+        for r in j.collect():
+            d = r.asDict()
+            pid, tid = d.get("pid"), d.get("tid")
+            assert d.get("lm") == (None if pid is None else {"p": pid})
+            assert d.get("rm") == (None if tid is None else {str(tid): 1.5})
+            out.append((pid, tid))
+        return sorted(out, key=lambda t: tuple((v is None, v) for v in t))
+
+    for how in _HOWS:
+        want = [r[1:] for r in _bruteforce(lrows, rrows, how) if r[0] == "intersects"]
+        for bcast in (True, False):
+            j = spatial_join(left, right, predicate="intersects", left_geom="geom",
+                             right_geom="geom", how=how, broadcast_right=bcast)
+            assert checked(j) == want, (how, bcast)
+
+    pt = lambda x, y: wkb.encode(wkb.point(x, y))  # noqa: E731
+    gl = spark.createDataFrame([(0, pt(10.0, 45.0)), (1, pt(50.0, 50.0))],
+                               "pid LONG, geom BINARY").withColumn(
+        "lm", F.create_map(F.lit("p"), F.col("pid")))
+    gr = spark.createDataFrame([(7, pt(10.001, 45.0)), (8, pt(-100.0, 0.0))],
+                               "tid INT, geom BINARY").withColumn(
+        "rm", F.create_map(F.col("tid").cast("string"), F.lit(1.5)))
+    for strategy in ("broadcast", "banded"):
+        j = geography_dwithin_join(gl, gr, distance_m=500.0, left_geom="geom",
+                                   right_geom="geom", strategy=strategy, how="full")
+        assert checked(j) == [(0, 7), (1, None), (None, 8)], strategy
+
+    probe = spark.createDataFrame(_odd_points(40, 3), "pid LONG, geom BINARY").withColumn(
+        "lm", F.create_map(F.lit("p"), F.col("pid")))
+    build = right.where("tid < 8")
+    got = [_rows(knn_join(probe, build, k=2, probe_geom="geom", build_geom="geom",
+                          build_id="tid", broadcast_threshold=bt), "pid", "tid", "knn_rank", "lm")
+           for bt in (0, 200_000)]
+    assert got[0] == got[1] and len(got[0]) == 43 * 2
+
+
+def test_broadcast_probe_scans_an_oversized_envelope(spark):
+    """One 100 x 100 box among 300 boxes of 0.01: the level fits the small
+    boxes, so the big one would cover over a hundred million cells; it is
+    scanned by every probe row instead of listed, and the join still
+    returns the brute force's rows."""
+    from sedona_db_spark.operators.spatial_join import _ProbeIndex
+
+    rng = np.random.default_rng(12)
+    x0, y0 = rng.uniform(-50, 50, 300), rng.uniform(-50, 50, 300)
+    boxes = [(i, wkb.encode(wkb.box(a, b, a + 0.01, b + 0.01))) for i, (a, b) in
+             enumerate(zip(x0, y0))] + [(300, wkb.encode(wkb.box(-60.0, -60.0, 40.0, 40.0)))]
+    ix = _ProbeIndex([g for _, g in boxes], np.arange(301), None)
+    assert ix.big.tolist() == [300] and len(ix.keys) < 10 * 300
+    px = np.concatenate([x0[:50] + 0.005, rng.uniform(-70, 70, 150)])
+    py = np.concatenate([y0[:50] + 0.005, rng.uniform(-70, 70, 150)])
+    left = spark.createDataFrame(
+        [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(px, py))],
+        "pid LONG, geom BINARY")
+    right = spark.createDataFrame(boxes, "tid INT, geom BINARY")
+    got = _rows(spatial_join(left, right, predicate="intersects", left_geom="geom",
+                             right_geom="geom", broadcast_right=True), "pid", "tid")
+    env = np.array([[a, b, a + 0.01, b + 0.01] for a, b in zip(x0, y0)] + [[-60, -60, 40, 40]])
+    want = sorted((int(i), int(j)) for i in range(len(px)) for j in range(301)
+                  if env[j, 0] <= px[i] <= env[j, 2] and env[j, 1] <= py[i] <= env[j, 3])
+    assert got == want and sum(t == 300 for _, t in want) > 50
