@@ -6,8 +6,9 @@ st_collect.rs`, `st_union_aggr.rs`, `st_intersection_aggr.rs`,
 Design for scale — each aggregate picks the cheapest Spark shape:
 
 * **ST_Envelope_Aggr** is pure column math: derive (xmin…ymax) once with a
-  vectorized bounds UDF, then built-in min/max aggregation. No geometry
-  objects ever shuffle; this is the one the 100 TB path uses for stats.
+  vectorized bounds UDF (`wkb.xy_env`), then built-in min/max aggregation.
+  No geometry objects ever shuffle; this is the one the 100 TB path uses
+  for stats.
 * **ST_Analyze_Aggr** likewise reduces per-row derived numerics with
   built-in aggregates (two-phase partial/final for free).
 * **ST_Collect / ST_Union_Aggr / ST_Intersection_Aggr** genuinely need the
@@ -50,11 +51,7 @@ def bounds_struct(geom: Column) -> Column:
         )
     )
     def b(s: pd.Series) -> pd.DataFrame:
-        out = np.full((len(s), 4), np.nan)
-        for i, v in enumerate(s):
-            if v is not None:
-                out[i] = algos.bounds(wkb.parse(v))
-        return pd.DataFrame(out, columns=["xmin", "ymin", "xmax", "ymax"])
+        return pd.DataFrame(wkb.xy_env(s)[2], columns=["xmin", "ymin", "xmax", "ymax"])
 
     return b(geom)
 
@@ -280,10 +277,7 @@ def register_sql_aggregates(spark) -> None:
     )
 
     def _envelope(s: pd.Series) -> Optional[bytes]:
-        bb = np.full((len(s), 4), np.nan)
-        for i, v in enumerate(s):
-            if v is not None:
-                bb[i] = algos.bounds(wkb.parse(bytes(v)))
+        bb = wkb.xy_env(s)[2]
         if not len(bb) or np.all(np.isnan(bb[:, 0])):
             return None
         return wkb.encode(wkb.box(

@@ -447,7 +447,7 @@ def _grid_knn(P: DataFrame, B: DataFrame, Bt: DataFrame, k: int, pgeom: str, bge
     ix, iy = grid.unpack(cell[probe])
     at, env, dist = _windows(ix, iy, tuple(v[probe, 1:].T), counts.cumsum(0).cumsum(1),
                              grid, bbox, k_eff, use_spheroid)
-    bc = P.sparkSession.sparkContext.broadcast((_EnvIndex(env, at, None, dist, None), cell[probe]))
+    bc = P.sparkSession.sparkContext.broadcast((_EnvIndex(env, at, None, dist), cell[probe]))
     bi = Bt.columns.index(bgeom)
 
     def replicate(batches):
@@ -548,14 +548,15 @@ def knn_join(
     pgeom, bgeom = f"_p_{probe_geom}", f"_b_{build_geom}"
 
     # --- BROADCAST (module docstring): ONE capped collect decides the route
-    # AND provides the build rows; only past the cap do we pay for the
-    # build statistics. The tie key is a content id of the build row.
+    # AND provides the build rows; only past the cap (at once for a cap of
+    # 0) do we pay for the build statistics. The tie key is a content id of
+    # the build row.
     cap = min(broadcast_threshold, 20_000)
     tie_col = f"_b_{build_id}" if build_id else "_tie"
     Bt = B if build_id else B.withColumn("_tie", _wide_id(9, _hashable(B)))
-    rows = Bt.limit(cap + 1).toArrow()
-    n_build = rows.num_rows
-    if n_build > cap:
+    rows = Bt.limit(cap + 1).toArrow() if cap > 0 else None
+    n_build = rows.num_rows if rows is not None else None
+    if rows is None or n_build > cap:
         n_build, mode, found, bbox = _build_stats(B, bgeom)
         small = n_build <= broadcast_threshold and (mode != "general" or use_spheroid)
         rows = Bt.toArrow() if small else None

@@ -437,18 +437,17 @@ class _EnvIndex:
     envelope. An envelope over ``_BIG_CELLS`` cells is not listed but kept
     in ``big``, which every probe row scans. With ``dist`` every envelope
     grows by its row's distance plus a rounding slack, and a NULL or NaN
-    distance covers nothing. The grid spans ``bounds`` (outside it, cells
-    clamp to the edge), or the (expanded) envelopes when ``bounds`` is None,
-    at ``grid_level``, or at a level fitted to those envelopes."""
+    distance covers nothing. The grid spans the (expanded) envelopes
+    (outside it, probe cells clamp to the edge), at ``grid_level``, or at a
+    level fitted to those envelopes."""
 
     def __init__(self, env: np.ndarray, rids: np.ndarray, grid_level: Optional[int],
-                 dist: Optional[np.ndarray] = None, bounds=WORLD):
+                 dist: Optional[np.ndarray] = None):
         if dist is not None:
             pad = dist + 2.0 ** -40 * (np.abs(env).max(axis=1) + np.abs(dist))
             env = env + pad[:, None] * np.array([-1.0, -1.0, 1.0, 1.0])
         e = env[~np.isnan(env[:, 0])]
-        if bounds is None:
-            bounds = _nonflat(*e[:, :2].min(axis=0), *e[:, 2:].max(axis=0)) if len(e) else WORLD
+        bounds = _nonflat(*e[:, :2].min(axis=0), *e[:, 2:].max(axis=0)) if len(e) else WORLD
         if grid_level is None:
             grid_level = pick_level_for_envelopes(e[:, 2] - e[:, 0], e[:, 3] - e[:, 1], bounds)
         self.env, self.rids, self.dist, self.grid = env, rids, dist, Grid(grid_level, bounds)

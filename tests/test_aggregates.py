@@ -1,11 +1,13 @@
 """Spatial aggregate tests (envelope/collect/union/analyze)."""
 
+import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from sedona_db_spark.functions import aggregates as agg
-from sedona_db_spark.geometry import wkb
+from sedona_db_spark.geometry import algos, wkb
 
 SCHEMA = StructType([
     StructField("grp", StringType()),
@@ -41,6 +43,29 @@ def test_envelope_aggr(df):
 def test_envelope_aggr_global(df):
     row = agg.envelope_aggr(df, "geometry").collect()[0]
     assert (row["xmin"], row["ymin"], row["xmax"], row["ymax"]) == (0, 0, 10, 10)
+
+
+def test_envelope_aggr_on_mixed_rows(spark, mixed_wkb):
+    """Per-row bounds, ``envelope_aggr`` and SQL ``ST_Envelope_Aggr`` over
+    NULL, EMPTY (LE, BE, EWKB), BE/EWKB points and polygonal/lineal rows
+    agree with ``algos.bounds``; a group of only NULL and EMPTY rows has
+    no envelope."""
+    rows = [("m", v) for v in mixed_wkb] + [("e", v) for v in mixed_wkb[:4]]
+    df = spark.createDataFrame(rows, SCHEMA)
+    env = np.array([algos.bounds(None if v is None else wkb.parse(v)) for v in mixed_wkb])
+    want = (np.nanmin(env[:, 0]), np.nanmin(env[:, 1]), np.nanmax(env[:, 2]), np.nanmax(env[:, 3]))
+    got = df.where("grp = 'm'").select(agg.bounds_struct(F.col("geometry")).alias("b")).collect()
+    np.testing.assert_array_equal(
+        np.array([[np.nan if v is None else v for v in r["b"]] for r in got]), env)
+    out = {r["grp"]: r for r in agg.envelope_aggr(df, "geometry", ["grp"]).collect()}
+    assert tuple(out["m"][f] for f in ("xmin", "ymin", "xmax", "ymax")) == want
+    assert algos.bounds(wkb.parse(bytes(out["m"]["envelope"]))) == want
+    assert out["e"]["xmin"] is None and out["e"]["envelope"] is None
+    agg.register_sql_aggregates(spark)
+    df.createOrReplaceTempView("mixed_env")
+    sql = {r["grp"]: r["e"] for r in spark.sql(
+        "SELECT grp, ST_Envelope_Aggr(geometry) AS e FROM mixed_env GROUP BY grp").collect()}
+    assert algos.bounds(wkb.parse(bytes(sql["m"]))) == want and sql["e"] is None
 
 
 def test_collect_aggr(spark):

@@ -186,7 +186,10 @@ def test_rect_touches_semantics(spark):
 
 def test_route_record_of_perfbench_shaped_join(spark, caplog):
     """Each spatial_join logs one INFO record on ``sedona_db_spark.plan``:
-    route, byte estimate, build rows, right-side kinds and grid level."""
+    route, byte estimate, build rows, right-side kinds and grid level (the
+    probe route's fitted to the polygon envelopes)."""
+    from sedona_db_spark.tiling import pick_level_for_envelopes
+
     rng = np.random.default_rng(12)
     x, y = rng.uniform(0, 100, 300), rng.uniform(0, 100, 300)
     pts = spark.createDataFrame(
@@ -207,8 +210,12 @@ def test_route_record_of_perfbench_shaped_join(spark, caplog):
         spatial_join(pts, pts, predicate="dwithin", distance=1.0, left_geom="geom",
                      right_geom="geom", grid_level=7, left_xy=("x", "y"))
     probe, cell = [r.plan for r in caplog.records if r.name == "sedona_db_spark.plan"]
+    env = wkb.xy_env([g for _, g in polys])[2]
+    fitted = (*env[:, :2].min(axis=0), *env[:, 2:].max(axis=0))
+    level = pick_level_for_envelopes(env[:, 2] - env[:, 0], env[:, 3] - env[:, 1], fitted)
     assert probe == {"route": "broadcast_probe", "est_bytes": 25 * (len(polys[0][1]) + 64.0),
-                     "build_rows": 25, "right_kinds": ["areal"], "grid_level": 4}
+                     "build_rows": 25, "right_kinds": ["areal"], "grid_level": level}
+    assert level == 2
     assert cell["route"] == "cell_join" and cell["grid_level"] == 7
     assert cell["right_kinds"] == ["point"] and cell["build_rows"] == 300
 
@@ -255,12 +262,15 @@ def _knn_dwithin_sides(spark, n_probe=300, n_build=100):
 
 def test_route_record_of_knn_and_dwithin_joins(spark, caplog):
     """Broadcast DWithin logs the probe route with its grid level (picked
-    from the build envelopes expanded by the distance) and kinds; each
-    ``knn_join`` logs its route, build rows, build mode and ``k_eff`` (the
-    grid route's record is pinned in ``test_knn_join.py``)."""
+    from the build envelopes expanded by the distance, over a grid fitted
+    to them) and kinds; each ``knn_join`` logs its route, build rows, build
+    mode and ``k_eff`` (the grid route's record is pinned in
+    ``test_knn_join.py``)."""
     from sedona_db_spark.tiling import pick_level_for_envelopes
 
     probe, build = _knn_dwithin_sides(spark)
+    bx, by, _ = wkb.decode_points_xy([r.geom for r in build.collect()])
+    fitted = (bx.min() - 2.0, by.min() - 2.0, bx.max() + 2.0, by.max() + 2.0)
     with caplog.at_level("INFO", logger="sedona_db_spark.plan"):
         spatial_join(probe, build, predicate="dwithin", distance=2.0, left_geom="geom",
                      right_geom="geom")
@@ -268,7 +278,7 @@ def test_route_record_of_knn_and_dwithin_joins(spark, caplog):
     dw, bc = [r.plan for r in caplog.records if r.name == "sedona_db_spark.plan"]
     assert dw == {"route": "broadcast_probe", "est_bytes": 100 * (21 + 64.0),
                   "build_rows": 100, "right_kinds": ["point"],
-                  "grid_level": pick_level_for_envelopes(np.full(1, 4.0), np.full(1, 4.0))}
+                  "grid_level": pick_level_for_envelopes(np.full(1, 4.0), np.full(1, 4.0), fitted)}
     assert bc == {"route": "broadcast", "build_rows": 100, "build_mode": "point", "k_eff": 5}
 
 

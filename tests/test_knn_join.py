@@ -683,6 +683,18 @@ def test_grid_knn_rect_and_general_builds(spark):
     _three_way(spark, probe, tris + rects[:5], 3)
 
 
+def test_empty_build_takes_broadcast_route_at_zero_threshold(spark, caplog):
+    """A broadcast cap of 0 skips the capped collect, but a build side with
+    no rows is still served by the broadcast route: no neighbours."""
+    P = spark.createDataFrame([(0, wkb.encode(wkb.point(1.0, 2.0)))], "cid LONG, geom BINARY")
+    B = spark.createDataFrame([], "sid LONG, geom BINARY")
+    with caplog.at_level("INFO", logger="sedona_db_spark.plan"):
+        res = knn_join(P, B, k=3, probe_geom="geom", build_geom="geom", broadcast_threshold=0)
+    assert res.count() == 0
+    assert [r.plan["route"] for r in caplog.records if r.name == "sedona_db_spark.plan"] == [
+        "broadcast"]
+
+
 def test_grid_knn_runs_one_bounded_pass(spark):
     """The 12k x 2k, k=5 case past the cap: a fixed number of Spark jobs,
     nothing left persisted after two calls in one session, and the
@@ -710,7 +722,7 @@ def test_grid_knn_runs_one_bounded_pass(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert n == 12_000 * 5
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9
         assert persisted() == before
     want = sorted(tuple(r) for r in knn_join(P, B, **kw).select(*cols).collect())
     key = "spark.sql.shuffle.partitions"

@@ -531,3 +531,29 @@ def test_broadcast_probe_scans_an_oversized_envelope(spark):
     want = sorted((int(i), int(j)) for i in range(len(px)) for j in range(301)
                   if env[j, 0] <= px[i] <= env[j, 2] and env[j, 1] <= py[i] <= env[j, 3])
     assert got == want and sum(t == 300 for _, t in want) > 50
+
+
+def test_broadcast_probe_grid_fits_projected_build(spark):
+    """1000 boxes of 500 m in projected metres against 20k points: the
+    probe index's grid spans the build envelopes, not the lon/lat world,
+    so the boxes spread over many cells instead of clamping into one, and
+    the join returns the brute force's rows."""
+    from sedona_db_spark.operators.spatial_join import _ProbeIndex
+
+    rng = np.random.default_rng(21)
+    x0, y0 = rng.uniform(4.0e5, 6.0e5, 1000), rng.uniform(4.5e6, 4.7e6, 1000)
+    boxes = [(i, wkb.encode(wkb.box(a, b, a + 500.0, b + 500.0))) for i, (a, b) in
+             enumerate(zip(x0, y0))]
+    ix = _ProbeIndex([g for _, g in boxes], np.arange(1000), None)
+    assert len(np.unique(ix.keys)) > 500
+    px, py = rng.uniform(3.9e5, 6.1e5, 20_000), rng.uniform(4.49e6, 4.71e6, 20_000)
+    left = spark.createDataFrame(
+        [(i, bytes(g)) for i, g in enumerate(wkb.encode_points_xy(px, py))],
+        "pid LONG, geom BINARY")
+    right = spark.createDataFrame(boxes, "tid INT, geom BINARY")
+    got = _rows(spatial_join(left, right, predicate="intersects", left_geom="geom",
+                             right_geom="geom", broadcast_right=True), "pid", "tid")
+    i, j = np.nonzero((x0 <= px[:, None]) & (px[:, None] <= x0 + 500.0)
+                      & (y0 <= py[:, None]) & (py[:, None] <= y0 + 500.0))
+    want = sorted(zip(i.tolist(), j.tolist()))
+    assert got == want and len(want) > 100
